@@ -39,6 +39,7 @@ _EXPORTS = {
     "dedup_exact": ".dedup",
     "dedup_incremental": ".dedup",
     "dedup_near": ".dedup",
+    "drop_near_duplicates": ".dedup",
     "lsh_band_stats": ".dedup",
     "lsh_candidate_pairs": ".dedup",
     "ngram_jaccard_pairs": ".dedup",

@@ -18,6 +18,7 @@ Design notes for scale:
 from __future__ import annotations
 
 import hashlib
+from itertools import islice
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -27,22 +28,28 @@ from pyspark.sql import types as T
 from ..plans.parallelism import ensure_min_parallelism
 
 
-def word_shingles(text_col, n: int = 3):
-    """Word n-gram shingles as an array column (distinct, for set semantics).
+def _ngram_slots(text_col, n: int):
+    """All word n-gram SLOTS (non-distinct, one per position) as an array
+    column. Short texts (< n tokens) yield one slot = the whole token span,
+    and a NULL text yields ``[""]``, so no row silently drops out.
 
-    Short texts (< n tokens) yield one shingle = the whole token span, so no
-    row silently drops out of dedup.
-    """
-    toks = F.split(text_col, " ")
+    The text is split ONCE per row: the n shifted slices of that one split
+    are zipped into structs and the ``transform`` lambda only joins struct
+    fields. A lambda that indexes into ``split(text)`` re-splits the whole
+    document for every slot (lambdas are interpreted per element), which
+    made shingling O(length^2)."""
+    toks = F.split(F.coalesce(text_col, F.lit("")), " ")
     k = F.greatest(F.size(toks) - (n - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.concat_ws(
-                " ", *[F.try_element_at(toks, i + j) for j in range(n)]
-            ),
-        )
+    zipped = F.arrays_zip(*[F.slice(toks, j + 1, F.size(toks)) for j in range(n)])
+    return F.transform(
+        F.slice(zipped, 1, k),
+        lambda z: F.concat_ws(" ", *[z[str(j)] for j in range(n)]),
     )
+
+
+def word_shingles(text_col, n: int = 3):
+    """Word n-gram shingles as an array column (distinct, for set semantics)."""
+    return F.array_distinct(_ngram_slots(text_col, n))
 
 
 def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -129,8 +136,9 @@ def _minhash_kernel(texts: pd.Series, num_hashes: int, shingle_n: int) -> pd.Ser
                     cache.clear()
                 cache[s] = ds
             all_ds.append(ds)
-        mins = [min(lane) for lane in zip(*all_ds)]
-        out.append([m.hex() for m in mins[:num_hashes]])
+        # a cached entry may hold more lanes than asked for: transpose
+        # only the first num_hashes
+        out.append([min(lane).hex() for lane in islice(zip(*all_ds), num_hashes)])
     return pd.Series(out)
 
 
@@ -196,9 +204,6 @@ def band_members(
     return keyed.groupBy("band").agg(F.collect_set("id").alias("ids"))
 
 
-_band_members = band_members  # back-compat private alias
-
-
 def lsh_candidate_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -221,7 +226,7 @@ def lsh_candidate_pairs(
     degenerate band — boilerplate-identical docs, guaranteed in web data —
     would otherwise emit O(n^2) pairs that no AQE skew-split can shrink.
     Bands above the cap are exact-dup clusters in disguise; drop them here
-    and let ``dedup_exact`` (which ``dedup_near`` now runs first) handle
+    and let ``dedup_exact`` (which ``dedup_near`` runs first) handle
     them at hash-groupBy cost. Use ``lsh_band_stats`` to see what was
     dropped. A capped band buffers at most its member-id array (8 bytes/id)
     during the aggregate, so even a pathological band is MBs, not the
@@ -309,8 +314,15 @@ def ngram_jaccard_pairs(
     cands = lsh_candidate_pairs(
         df, text_col, id_col, num_bands, rows_per_band, max_band_size, members
     )
-    sh = df.select(
-        F.col(id_col).alias("id"), word_shingles(F.col(text_col), shingle_n).alias("sh")
+    ids = (
+        cands.select(F.col("id_a").alias("id"))
+        .union(cands.select(F.col("id_b").alias("id")))
+        .distinct()
+    )
+    sh = (
+        df.select(F.col(id_col).alias("id"), F.col(text_col))
+        .join(ids, "id", "left_semi")
+        .select("id", word_shingles(F.col(text_col), shingle_n).alias("sh"))
     )
     j = (
         cands.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
@@ -327,6 +339,29 @@ def ngram_jaccard_pairs(
     return j.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
 
 
+def drop_near_duplicates(
+    survivors: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    threshold: float = 0.7,
+    **lsh_kwargs,
+) -> DataFrame:
+    """The near-only step of ``dedup_near``: drop every doc that has a
+    verified near-dup with a smaller id (greedy keep-lowest-id — the
+    standard single-pass policy; full connected components is overkill for
+    corpus dedup and needs an iterative job).
+
+    ``survivors`` must already be exact-deduplicated (``dedup_exact``
+    output): byte-identical clusters must never reach LSH, which is what
+    makes the hot-band cap safe. Plan: LSH candidates -> jaccard verify ->
+    distinct id_b -> left_anti. Only the (small) verified-duplicate id set
+    shuffles in the final join.
+    """
+    pairs = ngram_jaccard_pairs(survivors, text_col, id_col, threshold, **lsh_kwargs)
+    drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    return survivors.join(drop, id_col, "left_anti")
+
+
 def dedup_near(
     df: DataFrame,
     text_col: str = "text",
@@ -334,20 +369,11 @@ def dedup_near(
     threshold: float = 0.7,
     **lsh_kwargs,
 ) -> DataFrame:
-    """Near-duplicate removal: drop every doc that has a verified near-dup
-    with a smaller id (greedy keep-lowest-id — the standard single-pass
-    policy; full connected components is overkill for corpus dedup and
-    needs an iterative job).
-
-    Plan (round 2): exact dedup FIRST (hash-groupBy on md5 — byte-identical
-    clusters never reach LSH, which is what makes the hot-band cap safe),
-    then LSH candidates -> jaccard verify -> distinct id_b -> left_anti.
-    Only the (small) verified-duplicate id set shuffles in the final join.
-    """
+    """Near-duplicate removal over any frame: ``dedup_exact`` (hash-groupBy
+    on md5), then ``drop_near_duplicates`` on its survivors. Callers that
+    have just run ``dedup_exact`` call ``drop_near_duplicates`` directly."""
     survivors = dedup_exact(df, text_col, id_col)
-    pairs = ngram_jaccard_pairs(survivors, text_col, id_col, threshold, **lsh_kwargs)
-    drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return survivors.join(drop, id_col, "left_anti")
+    return drop_near_duplicates(survivors, text_col, id_col, threshold, **lsh_kwargs)
 
 
 def band_index(
@@ -602,17 +628,6 @@ def dedup_incremental_stats(
     # never a wide shuffle)
     return (
         totals.join(dropped, "_k").join(band_agg, "_k").drop("_k")
-    )
-
-
-def _ngram_slots(text_col, n: int):
-    """All n-gram SLOTS (non-distinct, one per position) — contamination is
-    measured per slot, so a phrase repeated within a doc counts each time."""
-    toks = F.split(text_col, " ")
-    k = F.greatest(F.size(toks) - (n - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), k),
-        lambda i: F.concat_ws(" ", *[F.try_element_at(toks, i + j) for j in range(n)]),
     )
 
 

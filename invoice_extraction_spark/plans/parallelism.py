@@ -33,6 +33,22 @@ from pyspark.sql import DataFrame
 LIGHT_INPUT_BYTES = 4 << 20
 
 
+# Logical plan nodes that redistribute rows away from their scan's splits.
+_REDISTRIBUTING = frozenset({"Join", "Union", "Aggregate"})
+
+
+def _plan_node_names(plan) -> set[str]:
+    """Class names of every node in a JVM logical plan (the plan's own
+    tree, not its string: a column named ``Joined`` is not a join)."""
+    names, todo = set(), [plan]
+    while todo:
+        node = todo.pop()
+        names.add(node.getClass().getSimpleName())
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
 def effective_scan_parallelism(df: DataFrame, cap: int) -> int | None:
     """How many tasks can actually receive ROWS from this frame's file scan,
     or None when unknowable (in-memory frames, remote/non-parquet files) —
@@ -56,8 +72,7 @@ def effective_scan_parallelism(df: DataFrame, cap: int) -> int | None:
         # union or aggregate redistributes rows, inputFiles() unions every
         # leaf's files, and summed row groups would misstate the actual
         # row placement — fall back to the plan's partition count there
-        lp = df._jdf.queryExecution().analyzed().toString()
-        if "Join" in lp or "Union" in lp or "Aggregate" in lp:
+        if _plan_node_names(df._jdf.queryExecution().analyzed()) & _REDISTRIBUTING:
             return None
         files = df.inputFiles()
     except Exception:

@@ -11,7 +11,8 @@ Per micro-batch of new documents:
 2. exact dedup — within-batch ``dedup_exact``, then an anti-join of the
    batch's text fingerprints against the persisted fingerprint index of
    every previously committed document;
-3. near dedup (optional) — within-batch ``dedup_near``, then
+3. near dedup (optional) — within-batch ``dedup_near`` (its near-only
+   step ``drop_near_duplicates`` when the exact tier ran), then
    ``dedup_incremental`` against the persisted LSH band index; with
    ``near_verify`` (DEFAULT ON — the sf1 measurement found 6.8% of the
    corpus silently deleted by pure band collisions at candidate level,
@@ -79,6 +80,7 @@ from ..operators.dedup import (
     dedup_incremental,
     dedup_incremental_sigverify,
     dedup_near,
+    drop_near_duplicates,
     sig_index,
 )
 from ..operators.span_dedup import (
@@ -272,7 +274,8 @@ def run_curate_stream(
         # non-duplicate, and history text is still never read
         new_sigs = None
         if near:
-            batch = dedup_near(
+            # the exact tier has already made the survivors dedup_near would
+            batch = (drop_near_duplicates if exact else dedup_near)(
                 batch,
                 text_col=text_col,
                 id_col=id_col,

@@ -24,10 +24,13 @@ expensive) stages see less data:
   8. mixture sampling   (deterministic per-stratum hash thresholds)
   9. sequence packing   (adds pack_id/pack_seq/pack_offset columns)
 
-Every enabled stage reports retention counts (one count() job per stage —
-the observability a curation run needs; disable with --no-counts to commit
-in a single pass). The result lands as ONE atomic snapshot with lineage,
-so a curation run is resumable/auditable exactly like an extraction run.
+Every enabled stage reports its retention count. Each stage's frame carries
+a named ``Observation`` (a row count); the commit's own write action fills
+them all, so counting adds no Spark job and persists nothing, and the
+counts print after the commit (a count the commit could not observe whole
+is recounted, loudly). The result lands as ONE atomic snapshot with
+lineage, so a curation run is resumable/auditable exactly like an
+extraction run.
 """
 
 from __future__ import annotations
@@ -158,7 +161,6 @@ def main(argv=None):
         default="bpe",
         help="token economics for packing: frozen-BPE counts (default) or whitespace estimate",
     )
-    ap.add_argument("--no-counts", action="store_true", help="skip per-stage retention counts (single-pass commit)")
     ap.add_argument("--master", default=None)
     ap.add_argument(
         "--streaming",
@@ -205,7 +207,8 @@ def main(argv=None):
     )
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import DataFrame, Observation, SparkSession
     from pyspark.sql import functions as F
 
     from invoice_extraction_spark.functions.text_metrics import (
@@ -300,23 +303,41 @@ def main(argv=None):
     df = ensure_min_parallelism(df)  # Arrow gates downstream; no-op at scale
     id_col, text_col = args.id_col, args.text_col
 
-    stage_counts: list[tuple[str, int]] = []
-    _persisted: list = []  # the previous stage to release once superseded
+    stages: list[tuple[str, Observation, DataFrame]] = []
 
     def record(name: str, frame):
-        """Count a stage's survivors without re-running the whole upstream
-        chain per count: persist the stage (MEMORY_AND_DISK), count it, drop
-        the previous stage's cache. Counts-on is therefore O(stages) passes
-        with one cached generation alive at a time — the observability mode;
-        --no-counts is the strict single-pass commit for runs where even one
-        cached generation is too much state."""
-        if not args.no_counts:
-            frame = frame.persist()
-            stage_counts.append((name, frame.count()))
-            while _persisted:
-                _persisted.pop().unpersist()
-            _persisted.append(frame)
-        return frame
+        """Attach a named row-count ``Observation`` to a stage's survivors
+        and return the observed frame. The first action that runs over the
+        stage fills it — the commit's write, or an action a later stage's
+        operator runs itself — so counting costs no persist and no extra
+        job. ``stage_counts`` reads them once the commit has returned."""
+        obs = Observation(f"stage:{name}")
+        stages.append((name, obs, frame))
+        return frame.observe(obs, F.count(F.lit(1)).alias("n"))
+
+    def stage_counts(n_committed: int) -> list[tuple[str, int]]:
+        """Every stage's count, checked against the next stage's (no stage
+        adds rows, and the last one is what the commit wrote). A count
+        Spark did not observe — adaptive execution replaced the stage's
+        branch by an empty relation, so the Observation holds an empty row
+        — or one below the next stage's is recounted from the frame, loudly.
+        The second happens when a stage's frame is read in several branches
+        and Spark keeps the count of one that stopped early: a sort-merge
+        join stops pulling rows once its other side runs out."""
+        out = []
+        floor = n_committed
+        for name, obs, frame in reversed(stages):
+            try:
+                n = obs.get["n"]
+            except Py4JJavaError:
+                n = None
+            if n is None or n < floor:
+                why = "not observed" if n is None else f"observed {n} < {floor}"
+                print(f"stage {name}: {why}; recounting", file=sys.stderr)
+                n = frame.count()
+            out.append((name, n))
+            floor = n
+        return out[::-1]
 
     df = record("input", df)
     if args.url_dedup:
@@ -328,11 +349,16 @@ def main(argv=None):
 
         df = record("exact_dedup", dedup_exact(df, text_col=text_col, id_col=id_col))
     if args.near_dedup:
-        from invoice_extraction_spark.operators.dedup import dedup_near
+        from invoice_extraction_spark.operators.dedup import (
+            dedup_near,
+            drop_near_duplicates,
+        )
 
+        # --exact-dedup has already made the survivors dedup_near would
+        near = drop_near_duplicates if args.exact_dedup else dedup_near
         df = record(
             "near_dedup",
-            dedup_near(df, text_col=text_col, id_col=id_col, threshold=args.jaccard),
+            near(df, text_col=text_col, id_col=id_col, threshold=args.jaccard),
         )
     if args.embedding_dedup is not None:
         if not args.embeddings:
@@ -471,7 +497,7 @@ def main(argv=None):
         ok_predicate=f"{text_col} IS NOT NULL AND length({text_col}) > 0",
     )
     n = sum(ln["n_rows"] for ln in manifest["lineage"])
-    for name, c in stage_counts:
+    for name, c in stage_counts(n):
         print(f"stage {name}: {c} docs")
     print(f"committed run_id={manifest['run_id']} rows={n}")
     if owned:

@@ -110,7 +110,7 @@ def test_line_dedup_stage(spark, tmp_path, capsys):
     spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"])).write.parquet(src)
 
     tbl = str(tmp_path / "curated")
-    main(["--source", src, "--table", tbl, "--line-dedup", "3", "--no-counts"])
+    main(["--source", src, "--table", tbl, "--line-dedup", "3"])
     capsys.readouterr()
     got = {r["doc_id"]: r["text"] for r in read_table(spark, tbl).collect()}
     assert len(got) == 5
@@ -128,8 +128,156 @@ def test_fix_text_stage(spark, tmp_path, capsys):
     src = str(tmp_path / "src.parquet")
     spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"])).write.parquet(src)
     tbl = str(tmp_path / "out")
-    main(["--source", src, "--table", tbl, "--fix-text", "--no-counts"])
+    main(["--source", src, "--table", tbl, "--fix-text"])
     capsys.readouterr()
     got = {r["doc_id"]: r["text"] for r in read_table(spark, tbl).collect()}
     assert got[1] == "Café résumé needs fixing here"
     assert got[2] == "already clean words here"
+
+
+def _stage_counts(printed: str) -> dict[str, int]:
+    return {
+        line.split(":")[0][len("stage "):]: int(line.split(":")[1].split()[0])
+        for line in printed.splitlines()
+        if line.startswith("stage ")
+    }
+
+
+def _edge_tables():
+    import random
+
+    rng = random.Random(3)
+    words = "alpha beta gamma delta eps zeta eta theta iota kappa".split()
+    base = " ".join(rng.choice(words) for _ in range(40))
+    return {
+        "all_unique": [
+            (i, f"doc {i} " + " ".join(rng.choice(words) for _ in range(30)))
+            for i in range(60)
+        ],
+        "one_doc": [(1, "just one document here")],
+        "identical": [(i, base) for i in range(50)],
+        "null_empty_short": [
+            (0, None), (1, ""), (2, "a"), (3, "a b"), (4, None), (5, ""), (6, "a b"), (7, "x y z"),
+        ],
+        "random_short": [
+            (i, " ".join(rng.choice(words[:3]) for _ in range(rng.randint(1, 4))))
+            for i in range(80)
+        ],
+        "near_copies": [(i, base + (" " + words[i % 10]) * (i % 3)) for i in range(30)]
+        + [
+            (100 + i, f"u{i} " + " ".join(rng.choice(words) for _ in range(30)))
+            for i in range(30)
+        ],
+    }
+
+
+@pytest.fixture(scope="module")
+def edge_dirs(spark, tmp_path_factory):
+    base = tmp_path_factory.mktemp("edge")
+    out = {}
+    for name, rows in _edge_tables().items():
+        out[name] = str(base / name)
+        spark.createDataFrame(rows, "doc_id long, text string").write.parquet(out[name])
+    return out
+
+
+def _counted(spark, src):
+    """What persisting and counting each stage gives."""
+    from invoice_extraction_spark.operators.dedup import dedup_exact, dedup_near
+
+    df = spark.read.parquet(src)
+    return {
+        "input": df.count(),
+        "exact_dedup": dedup_exact(df).count(),
+        "near_dedup": dedup_near(df).count(),
+    }
+
+
+@pytest.mark.parametrize(
+    "table", ["all_unique", "one_doc", "identical", "null_empty_short", "random_short", "near_copies"]
+)
+def test_observed_counts_equal_counted(spark, edge_dirs, tmp_path, capsys, table):
+    """Stage counts come from Observations filled by the commit's write and
+    equal what persisting and counting each stage gives."""
+    from jobs.curate import main
+
+    tbl = str(tmp_path / "t")
+    main(["--source", edge_dirs[table], "--table", tbl, "--exact-dedup", "--near-dedup"])
+    out = capsys.readouterr()
+    assert _stage_counts(out.out) == _counted(spark, edge_dirs[table])
+    assert "recounting" not in out.err  # every count was observed
+
+
+def test_observed_counts_under_sort_merge_joins(spark, edge_dirs, tmp_path, capsys):
+    """With sort-merge joins a stage frame read by a join in the same task
+    may be pulled only in part, so one copy of its Observation undercounts;
+    the count check catches that and recounts the stage."""
+    from jobs.curate import main
+
+    keys = ["spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold"]
+    old = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "-1")
+    try:
+        for table in ("all_unique", "near_copies"):
+            tbl = str(tmp_path / table)
+            main(["--source", edge_dirs[table], "--table", tbl, "--exact-dedup", "--near-dedup"])
+            got = _stage_counts(capsys.readouterr().out)
+            assert got == _counted(spark, edge_dirs[table])
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_observed_counts_with_lm_gate(spark, corpus_dir, tmp_path, capsys):
+    """The LM gate fits its model over the stage frames before the commit;
+    the observed counts still equal what counting each stage gives."""
+    from jobs.curate import main
+    from invoice_extraction_spark.operators.dedup import dedup_exact
+    from invoice_extraction_spark.operators.lm_score import fit_unigram_lm, lm_quality
+
+    df = spark.read.parquet(corpus_dir)
+    exact = dedup_exact(df)
+    lm = fit_unigram_lm(exact, fit_fraction=0.5)
+    ppl = lm_quality(exact, lm, id_col="doc_id")
+    cut = sorted(r["pseudo_perplexity"] for r in ppl.collect())[ppl.count() // 2]
+    expected = {
+        "input": df.count(),
+        "exact_dedup": exact.count(),
+        "lm_gate": ppl.filter(F.col("pseudo_perplexity") <= cut).count(),
+    }
+    assert 0 < expected["lm_gate"] < expected["exact_dedup"]
+    main(
+        [
+            "--source", corpus_dir,
+            "--table", str(tmp_path / "t"),
+            "--exact-dedup",
+            "--max-pseudo-ppl", str(cut),
+            "--lm-fit-fraction", "0.5",
+        ]
+    )
+    out = capsys.readouterr()
+    assert _stage_counts(out.out) == expected
+    assert "recounting" not in out.err
+
+
+def test_curate_run_job_count(spark, corpus_dir, tmp_path, capsys):
+    """Counting costs no Spark job: one --exact-dedup --near-dedup run is
+    the commit's own jobs (19 here; persisting and counting every stage
+    ran 31 on this table)."""
+    from jobs.curate import main
+
+    sc = spark.sparkContext
+    group = f"curate-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "job count of one curation run")
+    try:
+        main(["--source", corpus_dir, "--table", str(tmp_path / "t"), "--exact-dedup", "--near-dedup"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "stage near_dedup:" in capsys.readouterr().out
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 20, n_jobs

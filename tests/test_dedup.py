@@ -449,3 +449,72 @@ def test_sigverify_hot_band_cap_bounds_fanout(spark):
         new, planted, sigs, threshold=0.5, max_band_size=1000
     )
     assert kept.count() == 0
+
+
+def _reference_ngram_slots(text_col, n):
+    """The original shingling expression, kept as the reference: it indexes
+    into ``split(text)`` inside the lambda, re-splitting per slot."""
+    toks = F.split(text_col, " ")
+    k = F.greatest(F.size(toks) - (n - 1), F.lit(1))
+    return F.transform(
+        F.sequence(F.lit(1), k),
+        lambda i: F.concat_ws(" ", *[F.try_element_at(toks, i + j) for j in range(n)]),
+    )
+
+
+def test_word_shingles_equal_reference(spark):
+    from invoice_extraction_spark.operators.dedup import _ngram_slots, word_shingles
+
+    texts = [None, "", "a", "a b", "a b c", "a  b c", " a b c", "a b c ", "  ", "a b c d e a b c"]
+    d = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    for n in (1, 2, 3, 5):
+        ref = _reference_ngram_slots(F.col("text"), n)
+        rows = d.select(
+            "id",
+            _ngram_slots(F.col("text"), n).alias("slots"),
+            ref.alias("ref_slots"),
+            word_shingles(F.col("text"), n).alias("sh"),
+            F.array_distinct(ref).alias("ref_sh"),
+        ).collect()
+        for r in rows:
+            assert r["slots"] == r["ref_slots"], (n, texts[r["id"]])
+            assert r["sh"] == r["ref_sh"], (n, texts[r["id"]])
+    # a NULL text still yields one empty shingle
+    assert d.filter("id = 0").select(word_shingles(F.col("text")).alias("s")).first()["s"] == [""]
+
+
+def _expr_nodes(expr):
+    todo = [expr]
+    while todo:
+        e = todo.pop()
+        yield e
+        ch = e.children()
+        todo.extend(ch.apply(i) for i in range(ch.size()))
+
+
+def test_word_shingles_split_outside_lambda(spark):
+    """Shingling is linear in the text's length: the split is evaluated
+    outside the per-element lambda, which only joins struct fields."""
+    from invoice_extraction_spark.operators.dedup import word_shingles
+
+    d = spark.createDataFrame([(1, "a b c d")], "id int, text string")
+    plan = d.select(word_shingles(F.col("text")).alias("s"))._jdf.queryExecution().optimizedPlan()
+    exprs = plan.expressions()
+    nodes = [n for i in range(exprs.size()) for n in _expr_nodes(exprs.apply(i))]
+    name = lambda n: n.getClass().getSimpleName()  # noqa: E731
+    transforms = [n for n in nodes if name(n) == "ArrayTransform"]
+    assert transforms
+    assert any(name(n) == "StringSplit" for n in nodes)
+    for t in transforms:
+        assert not any(name(n) == "StringSplit" for n in _expr_nodes(t.function()))
+
+
+def test_dedup_near_is_exact_then_near_only_step(spark):
+    from invoice_extraction_spark.operators.dedup import drop_near_duplicates
+
+    d = _pathological(spark, n_identical=20).unionByName(_docs(spark).withColumn("doc_id", F.col("doc_id") + 1000))
+    whole = sorted(r["doc_id"] for r in dedup_near(d, threshold=0.5).collect())
+    split = sorted(
+        r["doc_id"] for r in drop_near_duplicates(dedup_exact(d), threshold=0.5).collect()
+    )
+    assert whole == split

@@ -73,7 +73,6 @@ def test_extract_curate_export_card(spark, base, capsys):
             "--min-quality", "0.01",
             "--pack-budget", "512",
             "--stratum-col", "lang",
-            "--no-counts",
         ]
     )
 

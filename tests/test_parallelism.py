@@ -195,3 +195,22 @@ def test_effective_scan_parallelism_declines_non_scan_plans(spark, tmp_path_fact
     assert effective_scan_parallelism(agg, 4) is None
     # plain scan still works
     assert effective_scan_parallelism(df, 4) >= 4
+
+
+@pytest.mark.parametrize("col", ["Joined", "UnionId"])
+def test_plan_node_check_ignores_column_names(spark, tmp_path_factory, col):
+    """The non-scan check walks plan node classes: a column whose name
+    contains 'Join' or 'Union' no longer makes a plain one-row-group scan
+    look redistributed (which skipped the repartition and left the kernel
+    on one task)."""
+    from invoice_extraction_spark.plans.parallelism import (
+        effective_scan_parallelism,
+    )
+
+    p = str(tmp_path_factory.mktemp("esp_col") / "t.parquet")
+    spark.range(2000).withColumnRenamed("id", col).coalesce(1).write.parquet(p)
+    df = spark.read.parquet(p)
+    assert effective_scan_parallelism(df, 4) == 1
+    assert effective_scan_parallelism(df.filter(F.col(col) > 5), 4) == 1
+    out = ensure_min_parallelism(df)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
