@@ -33,8 +33,10 @@ from pyspark.sql import DataFrame
 LIGHT_INPUT_BYTES = 4 << 20
 
 
-# Logical plan nodes that redistribute rows away from their scan's splits.
-_REDISTRIBUTING = frozenset({"Join", "Union", "Aggregate"})
+# Logical plan node classes that redistribute rows away from their scan's
+# splits: every join kind (Join, AsOfJoin, LateralJoin, ...), unions and
+# aggregates.
+_REDISTRIBUTING = ("Join", "Union", "Aggregate")
 
 
 def _plan_node_names(plan) -> set[str]:
@@ -72,7 +74,8 @@ def effective_scan_parallelism(df: DataFrame, cap: int) -> int | None:
         # union or aggregate redistributes rows, inputFiles() unions every
         # leaf's files, and summed row groups would misstate the actual
         # row placement — fall back to the plan's partition count there
-        if _plan_node_names(df._jdf.queryExecution().analyzed()) & _REDISTRIBUTING:
+        nodes = _plan_node_names(df._jdf.queryExecution().analyzed())
+        if any(k in node for node in nodes for k in _REDISTRIBUTING):
             return None
         files = df.inputFiles()
     except Exception:

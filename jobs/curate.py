@@ -25,12 +25,13 @@ expensive) stages see less data:
   9. sequence packing   (adds pack_id/pack_seq/pack_offset columns)
 
 Every enabled stage reports its retention count. Each stage's frame carries
-a named ``Observation`` (a row count); the commit's own write action fills
-them all, so counting adds no Spark job and persists nothing, and the
-counts print after the commit (a count the commit could not observe whole
-is recounted, loudly). The result lands as ONE atomic snapshot with
-lineage, so a curation run is resumable/auditable exactly like an
-extraction run.
+a named row count (``DataFrame.observe``); the commit's own write action
+fills them all, so counting adds no Spark job and persists nothing, and the
+counts print after the commit. A count is taken only from a copy of the
+stage that the write's executed plan proves it read in full
+(``plans/observed_counts.py``); a stage without one is recounted, loudly.
+The result lands as ONE atomic snapshot with lineage, so a curation run is
+resumable/auditable exactly like an extraction run.
 """
 
 from __future__ import annotations
@@ -207,8 +208,7 @@ def main(argv=None):
     )
     args = ap.parse_args(argv)
 
-    from py4j.protocol import Py4JJavaError
-    from pyspark.sql import DataFrame, Observation, SparkSession
+    from pyspark.sql import DataFrame, SparkSession
     from pyspark.sql import functions as F
 
     from invoice_extraction_spark.functions.text_metrics import (
@@ -217,6 +217,7 @@ def main(argv=None):
         repetition_stats_fast,
         token_count,
     )
+    from invoice_extraction_spark.plans.observed_counts import ObservedCounts
     from invoice_extraction_spark.session import get_spark
     from invoice_extraction_spark.sources.atomic import commit_append
 
@@ -303,41 +304,32 @@ def main(argv=None):
     df = ensure_min_parallelism(df)  # Arrow gates downstream; no-op at scale
     id_col, text_col = args.id_col, args.text_col
 
-    stages: list[tuple[str, Observation, DataFrame]] = []
+    run_id = uuid.uuid4().hex[:12]
+    stages: list[tuple[str, DataFrame]] = []
 
     def record(name: str, frame):
-        """Attach a named row-count ``Observation`` to a stage's survivors
-        and return the observed frame. The first action that runs over the
-        stage fills it — the commit's write, or an action a later stage's
-        operator runs itself — so counting costs no persist and no extra
-        job. ``stage_counts`` reads them once the commit has returned."""
-        obs = Observation(f"stage:{name}")
-        stages.append((name, obs, frame))
-        return frame.observe(obs, F.count(F.lit(1)).alias("n"))
+        """Attach a row count named after the stage (and this run) to a
+        stage's survivors and return the observed frame. The commit's write
+        fills it without a persist or an extra job; ``stage_counts`` reads
+        it from a copy the write read in full."""
+        stages.append((name, frame))
+        return frame.observe(f"stage:{run_id}:{name}", F.count(F.lit(1)).alias("n"))
 
-    def stage_counts(n_committed: int) -> list[tuple[str, int]]:
-        """Every stage's count, checked against the next stage's (no stage
-        adds rows, and the last one is what the commit wrote). A count
-        Spark did not observe — adaptive execution replaced the stage's
-        branch by an empty relation, so the Observation holds an empty row
-        — or one below the next stage's is recounted from the frame, loudly.
-        The second happens when a stage's frame is read in several branches
-        and Spark keeps the count of one that stopped early: a sort-merge
-        join stops pulling rows once its other side runs out."""
+    def stage_counts(seen) -> list[tuple[str, int]]:
+        """Every stage's count, as ``seen`` read it off the commit's plan.
+        A stage no copy of which the commit provably read in full (the
+        write reached it only through a semi join, or adaptive execution
+        dropped its branch) is recounted from its frame, loudly."""
+        if seen.error:
+            print(f"stage counts: {seen.error}", file=sys.stderr)
         out = []
-        floor = n_committed
-        for name, obs, frame in reversed(stages):
-            try:
-                n = obs.get["n"]
-            except Py4JJavaError:
-                n = None
-            if n is None or n < floor:
-                why = "not observed" if n is None else f"observed {n} < {floor}"
-                print(f"stage {name}: {why}; recounting", file=sys.stderr)
+        for name, frame in stages:
+            n = seen.get(f"stage:{run_id}:{name}")
+            if n is None:
+                print(f"stage {name}: not read in full by the commit; recounting", file=sys.stderr)
                 n = frame.count()
             out.append((name, n))
-            floor = n
-        return out[::-1]
+        return out
 
     df = record("input", df)
     if args.url_dedup:
@@ -490,14 +482,15 @@ def main(argv=None):
             df, "n_tokens", budget=args.pack_budget, shard_col=shard, order_col=id_col
         )
 
-    manifest = commit_append(
-        df,
-        args.table,
-        run_id=uuid.uuid4().hex[:12],
-        ok_predicate=f"{text_col} IS NOT NULL AND length({text_col}) > 0",
-    )
+    with ObservedCounts(spark) as seen:
+        manifest = commit_append(
+            df,
+            args.table,
+            run_id=run_id,
+            ok_predicate=f"{text_col} IS NOT NULL AND length({text_col}) > 0",
+        )
     n = sum(ln["n_rows"] for ln in manifest["lineage"])
-    for name, c in stage_counts(n):
+    for name, c in stage_counts(seen):
         print(f"stage {name}: {c} docs")
     print(f"committed run_id={manifest['run_id']} rows={n}")
     if owned:

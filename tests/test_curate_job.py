@@ -168,6 +168,15 @@ def _edge_tables():
             (100 + i, f"u{i} " + " ".join(rng.choice(words) for _ in range(30)))
             for i in range(30)
         ],
+        # more near-copies (low ids) than unique docs (high ids): a copy of
+        # exact_dedup read by a sort-merge semi join stops at the last
+        # candidate id in each partition and counts about the 40 near-copies,
+        # still above near_dedup's 12
+        "low_copies": [(i, (base if i % 2 else base[::-1]) + f" w{i}") for i in range(40)]
+        + [
+            (1000 + i, f"u{i} " + " ".join(rng.choice(words) for _ in range(30)))
+            for i in range(10)
+        ],
     }
 
 
@@ -194,11 +203,12 @@ def _counted(spark, src):
 
 
 @pytest.mark.parametrize(
-    "table", ["all_unique", "one_doc", "identical", "null_empty_short", "random_short", "near_copies"]
+    "table",
+    ["all_unique", "one_doc", "identical", "null_empty_short", "random_short", "near_copies", "low_copies"],
 )
 def test_observed_counts_equal_counted(spark, edge_dirs, tmp_path, capsys, table):
-    """Stage counts come from Observations filled by the commit's write and
-    equal what persisting and counting each stage gives."""
+    """Stage counts come from row counts the commit's write fills and equal
+    what persisting and counting each stage gives."""
     from jobs.curate import main
 
     tbl = str(tmp_path / "t")
@@ -209,9 +219,10 @@ def test_observed_counts_equal_counted(spark, edge_dirs, tmp_path, capsys, table
 
 
 def test_observed_counts_under_sort_merge_joins(spark, edge_dirs, tmp_path, capsys):
-    """With sort-merge joins a stage frame read by a join in the same task
-    may be pulled only in part, so one copy of its Observation undercounts;
-    the count check catches that and recounts the stage."""
+    """With sort-merge joins a stage frame read by a semi join in the same
+    task is pulled only in part, so that copy of its count is short (on
+    low_copies by more than near_dedup's floor); the counts come from the
+    copies the write read in full, so none is recounted."""
     from jobs.curate import main
 
     keys = ["spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold"]
@@ -219,11 +230,12 @@ def test_observed_counts_under_sort_merge_joins(spark, edge_dirs, tmp_path, caps
     for k in keys:
         spark.conf.set(k, "-1")
     try:
-        for table in ("all_unique", "near_copies"):
+        for table in ("all_unique", "near_copies", "low_copies"):
             tbl = str(tmp_path / table)
             main(["--source", edge_dirs[table], "--table", tbl, "--exact-dedup", "--near-dedup"])
-            got = _stage_counts(capsys.readouterr().out)
-            assert got == _counted(spark, edge_dirs[table])
+            out = capsys.readouterr()
+            assert _stage_counts(out.out) == _counted(spark, edge_dirs[table]), table
+            assert "recounting" not in out.err
     finally:
         for k, v in old.items():
             if v is None:
@@ -233,8 +245,8 @@ def test_observed_counts_under_sort_merge_joins(spark, edge_dirs, tmp_path, caps
 
 
 def test_observed_counts_with_lm_gate(spark, corpus_dir, tmp_path, capsys):
-    """The LM gate fits its model over the stage frames before the commit;
-    the observed counts still equal what counting each stage gives."""
+    """The LM gate runs its own actions over the stage frames before the
+    commit; the counts still equal what counting each stage gives."""
     from jobs.curate import main
     from invoice_extraction_spark.operators.dedup import dedup_exact
     from invoice_extraction_spark.operators.lm_score import fit_unigram_lm, lm_quality
@@ -262,6 +274,27 @@ def test_observed_counts_with_lm_gate(spark, corpus_dir, tmp_path, capsys):
     out = capsys.readouterr()
     assert _stage_counts(out.out) == expected
     assert "recounting" not in out.err
+
+
+def test_gate_dropping_every_doc_recounts(spark, corpus_dir, tmp_path, capsys):
+    """When the LM gate keeps nothing, adaptive execution drops the write's
+    upstream branch, so no copy of the earlier stages is read in full: the
+    run finishes, recounts them (saying so on stderr) and prints the same
+    numbers as counting each stage."""
+    from jobs.curate import main
+    from invoice_extraction_spark.operators.dedup import dedup_exact
+
+    df = spark.read.parquet(corpus_dir)
+    tbl = str(tmp_path / "t")
+    main(["--source", corpus_dir, "--table", tbl, "--exact-dedup", "--max-pseudo-ppl", "0"])
+    out = capsys.readouterr()
+    assert _stage_counts(out.out) == {
+        "input": df.count(),
+        "exact_dedup": dedup_exact(df).count(),
+        "lm_gate": 0,
+    }
+    assert "stage exact_dedup: not read in full by the commit; recounting" in out.err
+    assert out.out.rstrip().endswith("rows=0")
 
 
 def test_curate_run_job_count(spark, corpus_dir, tmp_path, capsys):

@@ -193,6 +193,10 @@ def test_effective_scan_parallelism_declines_non_scan_plans(spark, tmp_path_fact
     assert effective_scan_parallelism(joined, 4) is None
     agg = df.groupBy("id").count()
     assert effective_scan_parallelism(agg, 4) is None
+    # every join kind, not just Join: a lateral subquery is a LateralJoin
+    df.createOrReplaceTempView("esp_t")
+    lateral = spark.sql("SELECT * FROM esp_t, LATERAL (SELECT esp_t.id + 1 AS x)")
+    assert effective_scan_parallelism(lateral, 4) is None
     # plain scan still works
     assert effective_scan_parallelism(df, 4) >= 4
 
