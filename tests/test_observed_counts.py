@@ -69,3 +69,13 @@ def test_listener_is_removed_beside_other_listeners(spark):
     spark.range(3).observe(obs, F.count(F.lit(1)).alias("n")).collect()
     assert obs.get["n"] == 3
     test_listener_is_removed(spark)
+
+
+def test_action_jobs_are_tagged(spark):
+    """The re-run check reads the stages of the jobs the action ran, so
+    those jobs must carry the block's tag."""
+    seen = ObservedCounts(spark)
+    with seen:
+        assert spark.range(0, 100, 1, 4).repartition(2).count() == 100
+    assert seen.error is None
+    assert len(spark.sparkContext._jsc.sc().statusTracker().getJobIdsForTag(seen._tag)) >= 1
