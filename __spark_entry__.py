@@ -105,7 +105,7 @@ def _q_span_dedup_stats(spark, sf_dir):
     """Exact-substring (span) dedup observability — Lee et al. 2022
     family: duplicated >=20-token grams, removable occurrences, cut
     intervals, and docs touched over the corpus. Runs the Rabin-Karp
-    fast path; the md5-based oracle hash-checks its gram-equality
+    kernel; the md5-based oracle hash-checks its gram-equality
     classes end-to-end (counts agree iff the classes agree).
     (Replaced token_stats_by_source in the 50-slot registry — its
     parity lives on in tests/test_retired_queries.py.)"""
@@ -267,7 +267,7 @@ def _q_repetition_scores(spark, sf_dir):
     §A1.1 adapted to single-line word text): duplicate-token fraction and
     top-bigram fraction per document."""
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    s = tm.repetition_stats_fast("text")  # Arrow kernel == Column forms (test_repetition)
+    s = tm.repetition_stats("text")
     return d.select(
         "doc_id",
         s["dup_token_frac"].alias("dup_token_frac"),
@@ -282,23 +282,20 @@ def _q_nb_quality_scores(spark, sf_dir):
     quality gate, the CCNet train-against-a-trusted-source shape): per-
     source rollup of docs, keep decisions (score >= 0), and mean score.
     Frozen-literal deployment (the IVF/PQ/BPE discipline) — the oracle
-    checks the SCORING pipeline, not fit drift. Runs the Arrow fast path
-    (the production scorer); the Column/map-literal form is the oracle
-    reference, equality-asserted in test_doc_quality. (The synthetic corpus has a 31-word vocabulary, so
-    the frozen lexicon is small — the separation story lives in
-    test_doc_quality's labeled corpus; THIS row checks parity.)"""
+    checks the SCORING pipeline, not fit drift. (The synthetic corpus has
+    a 31-word vocabulary, so the frozen lexicon is small — the separation
+    story lives in test_doc_quality's labeled corpus; THIS row checks
+    parity.)"""
     from invoice_extraction_spark.functions.doc_nb_model import (
         PRIOR,
         WEIGHTS,
     )
-    from invoice_extraction_spark.operators.doc_quality import (
-        doc_nb_score_fast,
-    )
+    from invoice_extraction_spark.operators.doc_quality import doc_nb_score
 
     d = _par(_t(spark, sf_dir, "documents"))
     s = d.select(
         "source",
-        doc_nb_score_fast(F.col("text"), WEIGHTS, PRIOR).alias("score"),
+        doc_nb_score(F.col("text"), WEIGHTS, PRIOR).alias("score"),
     )
     return (
         s.groupBy("source")
@@ -327,7 +324,7 @@ def _q_exact_dedup(spark, sf_dir):
 def _q_minhash_signatures(spark, sf_dir):
     """MinHash signatures (4 hashes) for the first 100 docs."""
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    s = dd.minhash_signature_fast(F.col("text"), 4)
+    s = dd.minhash_signature(F.col("text"), 4)
     return d.select(
         "doc_id",
         F.element_at(s, 1).alias("sig0"),

@@ -22,20 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from invoice_extraction_spark.session import get_spark
 
 import __spark_entry__ as entrymod
-
-BENCH_QUERIES = [
-    "pricing_summary",
-    "revenue_top_customers",
-    "minhash_signatures",
-    "lsh_pairs",
-    "simhash_bands",
-    "cosine_topk",
-    "centroid_topk_per_label",
-    "user_sessions",
-    "doc_stats_by_lang",
-    "span_dedup_stats",
-    "nb_quality_scores",
-]
+from bench import BENCH_QUERIES
 
 
 def _spark():

@@ -342,14 +342,3 @@ def synth_pdf_docs_spark(spark, n_docs: int, seed: int = 42, partitions: int | N
 
     rng_df = spark.range(0, n_docs, 1, partitions or spark.sparkContext.defaultParallelism)
     return rng_df.mapInPandas(gen, schema=schema)
-
-
-def write_corpus_parquet(path: str, n_docs: int, seed: int = 42) -> str:
-    """Write the synthetic corpus as a parquet stand-in for the Iceberg table."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pdf = pages_pdf(n_docs, seed)
-    table = pa.Table.from_pandas(pdf, preserve_index=False)
-    pq.write_table(table, path)
-    return path

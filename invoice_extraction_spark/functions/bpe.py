@@ -183,9 +183,3 @@ def frozen_bpe_token_count():
     from .bpe_merges import FROZEN_BPE_MERGES
 
     return bpe_token_count_udf(FROZEN_BPE_MERGES)
-
-
-def bpe_vocab(merges: list[tuple[str, str]]) -> list[str]:
-    """The token inventory implied by a merge list: single characters are
-    implicit; merged symbols in creation order (stable ids for export)."""
-    return [a + b for a, b in merges]

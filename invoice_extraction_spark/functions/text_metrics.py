@@ -3,7 +3,9 @@
 The training-data-pipeline extras the task calls for: language-ID (n-gram /
 script heuristic), quality scoring (length/punct/stopword ratios), token
 counting, document fingerprinting. Each builder returns a Column over a text
-column, so these compose into any query and never leave WholeStageCodegen.
+column, so these compose into any query and never leave WholeStageCodegen —
+except ``repetition_stats``, whose per-token counting loop runs as an Arrow
+kernel (pandas UDF).
 
 Every expression here is deliberately writable in ANSI SQL too (DuckDB
 oracle parity — __spark_entry__.oracle_sql builds the mirror query).
@@ -13,7 +15,7 @@ from __future__ import annotations
 
 from typing import Iterator  # noqa: UP035 — the pandas_udf hint parser
 # resolves annotations against MODULE globals; typing.Iterator here makes
-# repetition_stats_fast's Iterator[pd.Series] signature recognizable
+# repetition_stats's Iterator[pd.Series] signature recognizable
 
 import pandas as pd
 from pyspark.sql import Column
@@ -96,82 +98,24 @@ def lang_guess(text: Column | str) -> Column:
     )
 
 
-def dup_token_fraction(text: Column | str) -> Column:
-    """Fraction of tokens that are repeats of an earlier token — the
-    Gopher-style 'duplicate content within a document' repetition signal
-    (Rae et al. 2021 §A1.1 use duplicate line/paragraph fractions; this
-    corpus is single-line word text, so the token is the repetition unit).
-    Rounded to 4 for oracle parity."""
-    t = tokens(text)
-    n = F.greatest(F.size(t), F.lit(1)).cast("double")
-    return F.round(F.lit(1.0) - F.size(F.array_distinct(t)).cast("double") / n, 4)
+def repetition_stats(text: Column | str) -> Column:
+    """Gopher-style within-document repetition signals (Rae et al. 2021
+    §A1.1 use duplicate line/paragraph fractions; this corpus is
+    single-line word text, so the token is the repetition unit), in ONE
+    Arrow batch pass returning
+    ``struct(dup_token_frac, top_bigram_frac, max_bigram_n)``:
 
+    - ``dup_token_frac``: fraction of tokens that repeat an earlier token;
+    - ``max_bigram_n``: multiplicity of the most frequent word bigram;
+    - ``top_bigram_frac``: the share of bigram slots it takes (the Gopher
+      'top n-gram character fraction' adapted to token counts).
 
-def _bigrams(t: Column) -> Column:
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(t) - 1, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.try_element_at(t, i), F.try_element_at(t, i + 1)),
-    )
-
-
-def max_bigram_count(text: Column | str) -> Column:
-    """Multiplicity of the document's most frequent word bigram. Computed as
-    the longest run in the SORTED bigram array (one linear fold — no O(n^2)
-    pairwise compare; stays a Column expression, no Python). NULL text ->
-    NULL (SQL convention; without the guard the bigram fallback slot made
-    this 1 on NULL while dup_token_fraction was NULL — inconsistent, and it
-    diverged from the Arrow kernel, which nulls the whole stats row)."""
-    c = F.col(text) if isinstance(text, str) else text
-    b = F.array_sort(_bigrams(tokens(text)))
-    run = F.aggregate(
-        F.sequence(F.lit(2), F.greatest(F.size(b), F.lit(2))),
-        F.struct(F.lit(1).alias("cur"), F.lit(1).alias("best")),
-        lambda acc, i: F.when(
-            F.try_element_at(b, i).isNotNull()
-            & (F.try_element_at(b, i) == F.try_element_at(b, i - 1)),
-            F.struct(
-                (acc["cur"] + 1).alias("cur"),
-                F.greatest(acc["best"], acc["cur"] + 1).alias("best"),
-            ),
-        ).otherwise(F.struct(F.lit(1).alias("cur"), acc["best"].alias("best"))),
-    )
-    return F.when(c.isNotNull(), run["best"])
-
-
-def top_bigram_fraction(text: Column | str) -> Column:
-    """Fraction of bigram slots taken by the single most frequent bigram —
-    the Gopher 'top n-gram character fraction' adapted to token counts
-    (§A1.1 drops docs whose top 2-gram exceeds 0.20 of characters)."""
-    t = tokens(text)
-    nb = F.greatest(F.size(t) - 1, F.lit(1)).cast("double")
-    return F.round(max_bigram_count(text).cast("double") / nb, 4)
-
-
-def repetition_keep(text: Column | str, max_dup_tokens: float = 0.6, max_top_bigram: float = 0.08) -> Column:
-    """Gopher-style repetition gate. Thresholds sit at ~p60/p92 of this
-    corpus's measured distributions (dup-token p50=0.54 max=0.72; top-bigram
-    p90=0.069 max=0.167) so the gate genuinely splits the data; the RULE —
-    drop documents dominated by repeated units — is the published one
-    (Rae et al. 2021 §A1.1). A bigram seen once is never 'repetition' —
-    without the multiplicity guard, any short document fails the fraction
-    test purely by having few bigram slots."""
-    return (dup_token_fraction(text) <= max_dup_tokens) & (
-        (max_bigram_count(text) < 2) | (top_bigram_fraction(text) <= max_top_bigram)
-    )
-
-
-def repetition_stats_fast(text: Column | str) -> Column:
-    """Arrow fast path for the Gopher repetition signals: ONE pandas batch
-    pass returning ``struct(dup_token_frac, top_bigram_frac, max_bigram_n)``.
-
-    The Column forms above are the oracle-parity reference, but
-    ``max_bigram_count``'s sorted-run fold is an INTERPRETED HOF evaluated
-    per element (and ``repetition_keep`` evaluates it twice) — measured
-    ~40 ms/doc, which turned a 50k-doc corpus-wide gate into a 30+ minute
-    single-stage crawl at the sf1 rehearsal. Same trap as the HOF MinHash
-    (45x, round 1) — per-element loops belong in Arrow kernels. This
-    kernel is equality-asserted against the Column forms (including the
-    half-up 4-dp rounding) in test_repetition."""
+    Fractions are rounded half-up to 4 dp for oracle parity; NULL text
+    gives a NULL row. The Column folds in tests/references.py are the
+    equality reference (test_repetition); as Spark HOFs they are
+    interpreted per element — measured ~40 ms/doc, which turned a 50k-doc
+    corpus-wide gate into a 30+ minute single-stage crawl at the sf1
+    rehearsal."""
     import math
     from collections import Counter
 
@@ -200,8 +144,8 @@ def repetition_stats_fast(text: Column | str) -> Column:
         toks = s.split(" ")  # == F.split(text, " ") incl. empty tokens
         n = len(toks)
         dup = _r4(1.0 - len(set(toks)) / max(n, 1))
-        # bigram list mirrors _bigrams: i in 1..max(n-1, 1), concat_ws
-        # skips the null second element of the final/short slot
+        # bigram slots i in 1..max(n-1, 1); a doc under two tokens has
+        # one slot holding its single token (or "")
         if n >= 2:
             bigrams = [f"{toks[i]} {toks[i + 1]}" for i in range(n - 1)]
         else:
@@ -221,11 +165,17 @@ def repetition_stats_fast(text: Column | str) -> Column:
     return _stats(F.col(text) if isinstance(text, str) else text)
 
 
-def repetition_keep_fast(
+def repetition_keep(
     stats: Column, max_dup_tokens: float = 0.6, max_top_bigram: float = 0.08
 ) -> Column:
-    """The ``repetition_keep`` decision read from a ``repetition_stats_fast``
-    struct — same thresholds, one kernel pass instead of two HOF folds."""
+    """Gopher-style repetition gate over a ``repetition_stats`` struct.
+    Thresholds sit at ~p60/p92 of this corpus's measured distributions
+    (dup-token p50=0.54 max=0.72; top-bigram p90=0.069 max=0.167) so the
+    gate genuinely splits the data; the RULE — drop documents dominated by
+    repeated units — is the published one (Rae et al. 2021 §A1.1). A
+    bigram seen once is never 'repetition' — without the multiplicity
+    guard, any short document fails the fraction test purely by having
+    few bigram slots."""
     return (stats["dup_token_frac"] <= max_dup_tokens) & (
         (stats["max_bigram_n"] < 2) | (stats["top_bigram_frac"] <= max_top_bigram)
     )

@@ -94,7 +94,6 @@ _EXPORTS = {
     # supervised doc-quality classifier
     "fit_doc_nb": ".doc_quality",
     "doc_nb_score": ".doc_quality",
-    "doc_nb_score_fast": ".doc_quality",
     "doc_nb_keep": ".doc_quality",
     "save_doc_nb": ".doc_quality",
     "load_doc_nb": ".doc_quality",

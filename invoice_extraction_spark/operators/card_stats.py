@@ -43,8 +43,8 @@ from pyspark.sql import functions as F
 
 from ..functions.text_metrics import (
     quality_score,
-    repetition_keep_fast,
-    repetition_stats_fast,
+    repetition_keep,
+    repetition_stats,
     token_count,
 )
 from ..sources.atomic import _read_manifests, list_manifests, read_snapshot_delta
@@ -269,7 +269,7 @@ def _write_agg_row(spark, agg_dir, run_id, ordinal, payload, token_counter) -> N
         text = F.col(text_col)
         t = delta.withColumn("_q", quality_score(text)).withColumn(
             "_r",
-            repetition_keep_fast(repetition_stats_fast(text)).cast("double"),
+            repetition_keep(repetition_stats(text)).cast("double"),
         )
         totals = t.agg(
             F.count("*").alias("d"),

@@ -1,6 +1,7 @@
 """Deduplication operators over a document table — exact, MinHash+LSH,
 SimHash, n-gram Jaccard. First-class components for the 100 TB training-data
-pipeline (task brief), all pure Column expressions (JVM-side, zero Python).
+pipeline (task brief): Column expressions, except the per-element MinHash
+and SimHash loops, which run as Arrow kernels (pandas UDFs).
 
 Design notes for scale:
 - every hash is md5 (same function exists in DuckDB -> oracle-checkable, and
@@ -70,22 +71,6 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return df.join(keep, id_col, "left_semi")
 
 
-def minhash_signature(text_col, num_hashes: int = 8, shingle_n: int = 3):
-    """MinHash signature as an array of hex-string minima.
-
-    sig_j = min over shingles s of md5(j || ':' || s). Lexicographic min over
-    md5 hex strings is a valid uniform min-hash family and — unlike integer
-    mixing — is implementable identically in ANSI SQL (oracle parity).
-    """
-    sh = word_shingles(text_col, shingle_n)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda j: F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(j.cast("string"), F.lit(":"), s)))
-        ),
-    )
-
-
 # Per-worker memo of shingle -> [md5('0:'||s).digest(), md5('1:'||s)...].
 # MinHash is a pure function of the shingle, and web shingles are Zipfian
 # (boilerplate phrases repeat across most documents of a host/template), so
@@ -103,15 +88,19 @@ _MH_CACHE_CAP = 1 << 17
 
 
 def _minhash_kernel(texts: pd.Series, num_hashes: int, shingle_n: int) -> pd.Series:
-    """Arrow-batch MinHash with EXACTLY the semantics of minhash_signature
-    (same shingling, same md5('j:'||s) family, same lexicographic min) —
-    the fast path. Spark's higher-order-function lambdas are interpreted per
-    element (no codegen), which made the Column version ~20x slower; hashlib
-    inside a pandas UDF is the sanctioned vectorized alternative.
+    """Arrow-batch MinHash: sig_j = min over the doc's ``word_shingles``
+    s of md5(j || ':' || s), as a hex string. Lexicographic min over md5
+    hex strings is a valid uniform min-hash family and — unlike integer
+    mixing — is implementable identically in ANSI SQL (oracle parity).
+    EXACTLY the semantics of the Column reference in tests/references.py
+    (same shingling, same md5 family, same min; equality-asserted in
+    test_dedup). That reference nests higher-order-function lambdas, which
+    Spark interprets per element (no codegen) and measured ~20x slower;
+    hashlib inside a pandas UDF is the vectorized alternative.
 
     Round 6: lane minima compare raw 16-byte digests (hex encoding is
-    order-preserving, so min(digest).hex() == min(hexdigest) — asserted in
-    test_dedup against the Column oracle) and shingle hashes are memoized
+    order-preserving, so min(digest).hex() == min(hexdigest)) and shingle
+    hashes are memoized
     per worker (_MH_CACHE), which removes the 8-md5-per-shingle recompute
     for every repeated boilerplate shingle in the corpus. The lane minima
     run as one C-level min() per lane over the transposed digest lists
@@ -142,8 +131,9 @@ def _minhash_kernel(texts: pd.Series, num_hashes: int, shingle_n: int) -> pd.Ser
     return pd.Series(out)
 
 
-def minhash_signature_fast(text_col, num_hashes: int = 8, shingle_n: int = 3):
-    """pandas_udf twin of minhash_signature (verified equal in tests)."""
+def minhash_signature(text_col, num_hashes: int = 8, shingle_n: int = 3):
+    """MinHash signature as an array of ``num_hashes`` hex-string minima
+    (``_minhash_kernel`` as a pandas UDF)."""
     f = F.pandas_udf(
         lambda s: _minhash_kernel(s, num_hashes, shingle_n),
         T.ArrayType(T.StringType()),
@@ -167,13 +157,6 @@ def band_keys_from_sig(sig_col, num_bands: int = 4, rows_per_band: int = 2):
     )
 
 
-def minhash_band_keys(text_col, num_bands: int = 4, rows_per_band: int = 2):
-    """Single-expression band keys (Column-only minhash; reference/oracle
-    path — use the two-step fast path in lsh_candidate_pairs for bulk work)."""
-    sig = minhash_signature(text_col, num_bands * rows_per_band)
-    return band_keys_from_sig(sig, num_bands, rows_per_band)
-
-
 DEFAULT_MAX_BAND_SIZE = 64
 
 
@@ -195,7 +178,7 @@ def band_members(
     df = ensure_min_parallelism(df)  # 1-row-group local files scan 1-task
     sigd = df.select(
         F.col(id_col).alias("id"),
-        minhash_signature_fast(F.col(text_col), num_bands * rows_per_band).alias("sig"),
+        minhash_signature(F.col(text_col), num_bands * rows_per_band).alias("sig"),
     )
     keyed = sigd.select(
         "id",
@@ -389,7 +372,7 @@ def band_index(
     df = ensure_min_parallelism(df)
     sigd = df.select(
         F.col(id_col).alias("id"),
-        minhash_signature_fast(F.col(text_col), num_bands * rows_per_band).alias("sig"),
+        minhash_signature(F.col(text_col), num_bands * rows_per_band).alias("sig"),
     )
     return sigd.select(
         "id",
@@ -487,7 +470,7 @@ def sig_index(
     df = ensure_min_parallelism(df)
     return df.select(
         F.col(id_col).alias("id"),
-        minhash_signature_fast(F.col(text_col), num_hashes, shingle_n).alias(
+        minhash_signature(F.col(text_col), num_hashes, shingle_n).alias(
             "sig"
         ),
     )
@@ -672,35 +655,13 @@ def cross_doc_contamination(
     )
 
 
-def simhash_bits(text_col, bits: int = 32):
-    """SimHash as a 32-char '0'/'1' string (portable — no integer bit ops).
-
-    Per token t, bit b's evidence is the high bit of hex nibble b of md5(t)
-    (hex char >= '8'); the document bit is the sign of the summed evidence.
-    """
-    toks = F.split(text_col, " ")
-    return F.concat_ws(
-        "",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(bits)),
-            lambda b: F.when(
-                F.aggregate(
-                    toks,
-                    F.lit(0),
-                    lambda acc, t: acc
-                    + F.when(F.substring(F.md5(t), b, 1) >= "8", 1).otherwise(-1),
-                )
-                > 0,
-                F.lit("1"),
-            ).otherwise(F.lit("0")),
-        ),
-    )
-
-
 def _simhash_kernel(texts: pd.Series, bits: int) -> pd.Series:
-    """Arrow-batch SimHash with EXACTLY the semantics of simhash_bits (same
-    per-token md5-nibble evidence, same sign rule) — the fast path. The
-    Column form builds bits x aggregate(tokens) as nested higher-order
+    """Arrow-batch SimHash as a ``bits``-char '0'/'1' string (portable —
+    no integer bit ops). Per token t, bit b's evidence is the high bit of
+    hex nibble b of md5(t) (hex char >= '8'); the document bit is the sign
+    of the summed evidence. EXACTLY the semantics of the Column reference
+    in tests/references.py (equality-asserted in test_dedup). That
+    reference builds bits x aggregate(tokens) as nested higher-order
     functions, which Spark evaluates interpreted per element (no codegen);
     q:simhash_bands ran 19.9s vs 2.5s for the equivalent minhash work
     (VERDICT r1 'What's wrong' #1). Token bit-vectors are memoized per batch
@@ -710,7 +671,7 @@ def _simhash_kernel(texts: pd.Series, bits: int) -> pd.Series:
     cache: dict[str, "np.ndarray"] = {}
     out = []
     for t in texts:
-        if t is None:  # Column form yields NULL for NULL input
+        if t is None:  # NULL in, NULL out (SQL convention)
             out.append(None)
             continue
         acc = np.zeros(bits, dtype=np.int64)
@@ -732,8 +693,8 @@ def _simhash_kernel(texts: pd.Series, bits: int) -> pd.Series:
     return pd.Series(out, dtype=object)
 
 
-def simhash_fast(text_col, bits: int = 32):
-    """pandas_udf twin of simhash_bits (equality-asserted in test_dedup)."""
+def simhash(text_col, bits: int = 32):
+    """SimHash bit string (``_simhash_kernel`` as a pandas UDF)."""
     f = F.pandas_udf(lambda s: _simhash_kernel(s, bits), T.StringType())
     return f(text_col)
 
@@ -743,14 +704,11 @@ def simhash_buckets(
     text_col: str = "text",
     id_col: str = "doc_id",
     prefix: int = 16,
-    fast: bool = True,
 ) -> DataFrame:
     """Docs grouped by SimHash prefix band — near-dup buckets at scale
-    (bucket key is tiny and shuffle-friendly). ``fast=True`` (default) uses
-    the Arrow kernel; the Column form remains the oracle/reference mirror."""
+    (bucket key is tiny and shuffle-friendly)."""
     df = ensure_min_parallelism(df)
-    sh = simhash_fast(F.col(text_col)) if fast else simhash_bits(F.col(text_col))
-    s = df.select(F.col(id_col), sh.alias("simhash"))
+    s = df.select(F.col(id_col), simhash(F.col(text_col)).alias("simhash"))
     return s.groupBy(F.substring("simhash", 1, prefix).alias("simhash_band")).agg(
         F.count("*").alias("n_docs"), F.min(id_col).alias("min_id")
     )

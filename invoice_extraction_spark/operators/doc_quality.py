@@ -24,15 +24,15 @@ level with a TOKEN VOCABULARY instead of hash buckets):
   token universe). Out-of-vocabulary tokens score 0 — explicitly a
   lexicon classifier, like the fastText models it mirrors (whose hashed
   n-gram table is likewise finite).
-- **Scoring is map-only.** `doc_nb_score` (Column form, the DuckDB-oracle
-  reference) folds a literal token->weight map over the document's tokens;
-  `doc_nb_score_fast` is the Arrow twin carrying the vocabulary as a plain
-  dict inside the pandas UDF — zero shuffle, zero join, O(tokens) per doc,
-  equality-asserted in tests (the `repetition_stats_fast` fast-path /
-  reference-form discipline). At 100 TB the scorer is embarrassingly
-  parallel; the only cross-node traffic is the fit's single count shuffle,
-  and the fit can run on a hash-sample (count statistics converge — the
-  LM/IVF sampled-fit argument).
+- **Scoring is map-only.** `doc_nb_score` is an Arrow kernel carrying the
+  vocabulary as a plain dict inside the pandas UDF — zero shuffle, zero
+  join, no map literal in the plan, O(tokens) per doc. A Column form that
+  folds a literal token->weight map over the tokens lives in
+  tests/references.py as the equality reference, and the DuckDB twins in
+  test_doc_quality pin the kernel itself. At 100 TB the scorer is
+  embarrassingly parallel; the only cross-node traffic is the fit's single
+  count shuffle, and the fit can run on a hash-sample (count statistics
+  converge — the LM/IVF sampled-fit argument).
 
 Tokenization matches the corpus queries' contract: lowercase, split on
 single spaces (`string_split(text, ' ')` in the DuckDB twins), empty
@@ -120,36 +120,13 @@ def fit_doc_nb(
 def doc_nb_score(
     text: Column | str, weights: list[tuple[str, float]], prior: float
 ) -> Column:
-    """Column-form scorer — the DuckDB-oracle reference: mean per-token
-    log-likelihood ratio over the document plus the prior, rounded to 4.
-    Positive = keep-worthy. The vocabulary rides the plan as a literal map
-    (OOV tokens contribute 0); mean rather than sum so the score is
-    length-invariant (a long junk page can't buy its way positive on OOV
-    mass, and thresholds transfer across documents of different lengths).
-    Use for small frozen vocabularies; at vocab_k in the tens of thousands
-    prefer ``doc_nb_score_fast`` (same numbers, dict lookup instead of a
-    map literal in the plan)."""
-    m = F.create_map(
-        *[F.lit(x) for tw in weights for x in (tw[0], float(tw[1]))]
-    )
-    toks = _tokens(text)
-    total = F.aggregate(
-        toks,
-        F.lit(0.0),
-        lambda acc, t: acc + F.coalesce(m[t], F.lit(0.0)),
-    )
-    n = F.greatest(F.size(toks), F.lit(1))
-    return F.round(total / n + F.lit(float(prior)), 4)
-
-
-def doc_nb_score_fast(
-    text: Column | str, weights: list[tuple[str, float]], prior: float
-) -> Column:
-    """Arrow twin of ``doc_nb_score`` (equality-asserted in
-    test_doc_quality): the vocabulary travels once per executor inside the
-    pandas UDF closure as a plain dict — map-only, no join, no map-literal
-    in the plan, O(tokens) per document. The scale path for production
-    vocabularies."""
+    """Mean per-token log-likelihood ratio over the document plus the
+    prior, rounded to 4. Positive = keep-worthy. OOV tokens contribute 0;
+    mean rather than sum so the score is length-invariant (a long junk page
+    can't buy its way positive on OOV mass, and thresholds transfer across
+    documents of different lengths). The vocabulary travels once per
+    executor inside the pandas UDF closure as a plain dict — map-only, no
+    join, O(tokens) per document."""
     table = {t: float(w) for t, w in weights}
     p = float(prior)
 
@@ -204,12 +181,6 @@ def doc_nb_keep(
     prior: float,
     text_col: str = "text",
     threshold: float = 0.0,
-    fast: bool = True,
 ) -> DataFrame:
-    """The gate form: keep documents scoring >= ``threshold``. Map-only
-    either way; ``fast`` picks the Arrow scorer (default — production
-    vocabularies don't fit a plan literal)."""
-    score = (doc_nb_score_fast if fast else doc_nb_score)(
-        F.col(text_col), weights, prior
-    )
-    return df.filter(score >= threshold)
+    """The gate form: keep documents scoring >= ``threshold`` (map-only)."""
+    return df.filter(doc_nb_score(F.col(text_col), weights, prior) >= threshold)

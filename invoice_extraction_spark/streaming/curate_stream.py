@@ -70,8 +70,8 @@ from pyspark.sql import functions as F
 
 from ..functions.text_metrics import (
     quality_score,
-    repetition_keep_fast,
-    repetition_stats_fast,
+    repetition_keep,
+    repetition_stats,
 )
 from ..operators.dedup import (
     band_index,
@@ -141,7 +141,6 @@ def run_curate_stream(
     max_per_domain: int | None = None,
     span_l: int | None = None,
     span_min_count: int = 2,
-    span_fast: bool = True,
     span_bloom: bool = False,
     max_files_per_trigger: int | None = None,
     compact_every: int | None = None,
@@ -149,8 +148,8 @@ def run_curate_stream(
 ) -> None:
     """Drain all unseen source parquet files (Trigger.AvailableNow) through
     the incremental curation chain (module docstring). Keep the tier
-    config (``num_bands``/``rows_per_band``/``span_l``/``span_fast``)
-    constant for the life of an index root.
+    config (``num_bands``/``rows_per_band``/``span_l``) constant for the
+    life of an index root.
 
     ``nb_weights_path``: a frozen supervised doc-quality model
     (``operators/doc_quality.save_doc_nb``) — joins the stateless gates
@@ -175,9 +174,6 @@ def run_curate_stream(
     every other index partition, and ``load_rows`` over the stats dir is
     the whole retention history."""
     from pyspark.sql import types as T
-
-    if span_bloom and not span_fast:
-        raise ValueError("span_bloom requires span_fast=True (int64 hash domain)")
 
     nb_model = None
     if nb_weights_path is not None:
@@ -236,7 +232,7 @@ def run_curate_stream(
             batch = batch.filter(quality_score(F.col(text_col)) >= min_quality)
         if repetition_gate:
             batch = batch.filter(
-                repetition_keep_fast(repetition_stats_fast(F.col(text_col)))
+                repetition_keep(repetition_stats(F.col(text_col)))
             )
         if nb_model is not None:
             from ..operators.doc_quality import doc_nb_keep
@@ -375,7 +371,7 @@ def run_curate_stream(
             gram_idx = load_span_index(sp, dirs["grams"], before_seq=batch_id)
             bloom = None
             if gram_idx is None:
-                gram_idx = _empty_index(sp, span_fast)
+                gram_idx = _empty_index(sp)
             elif span_bloom:
                 # probe through the compact presence tier: the gram index
                 # is scanned once per batch but never shuffled; the exact
@@ -394,7 +390,6 @@ def run_curate_stream(
                 id_col,
                 span_l,
                 span_min_count,
-                span_fast,
                 bloom=bloom,
             )
             # the rewritten frame feeds the exact delta AND the commit

@@ -28,7 +28,7 @@ after the commit: the replay is skipped wholesale and the delta is already
 on disk.
 
 Bucketing policy is FIXED for the life of an index (keep ``n_planes`` /
-``seed`` / ``dim`` / ``n_probe`` constant, like ``fast`` for the span
+``seed`` / ``dim`` / ``n_probe`` constant, like ``l`` for the span
 stream): the per-batch data-dependent hot-bucket REFINEMENT of the batch
 operators would assign history and future rows inconsistent keys, so the
 stream persists plain deterministic memberships and instead applies

@@ -25,7 +25,7 @@ replay is skipped wholesale and the delta is already on disk. No heal
 pass exists because no state can be lost between the two writes.
 
 Scale shape: the per-batch partitions grow O(batches); the fold is one
-hash aggregation over hash-width rows (8-byte keys on the fast path).
+hash aggregation over hash-width rows (8-byte keys).
 ``compact_span_index`` folds them back to a single partition with a
 marker-protected directory swap for long-running streams; pass
 ``compact_every`` to run it automatically whenever the live partition
@@ -76,9 +76,8 @@ def load_span_index(
     )
 
 
-def _empty_index(spark: SparkSession, fast: bool) -> DataFrame:
-    gh_t = "bigint" if fast else "string"
-    return spark.createDataFrame([], f"gh {gh_t}, n_occ bigint, canon string")
+def _empty_index(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame([], "gh bigint, n_occ bigint, canon string")
 
 
 def run_span_dedup_stream(
@@ -92,7 +91,6 @@ def run_span_dedup_stream(
     id_col: str = "url",
     l: int = DEFAULT_SPAN_TOKENS,
     min_count: int = 2,
-    fast: bool = True,
     max_files_per_trigger: int | None = None,
     compact_every: int | None = None,
     use_bloom: bool = False,
@@ -101,8 +99,7 @@ def run_span_dedup_stream(
     per batch — probe the persisted gram index, cut every non-canonical
     occurrence of a duplicated span (cross-batch: history always wins;
     within-batch: batch-canonical survives), write the idempotent index
-    delta partition, commit the rewritten survivors atomically. Keep
-    ``fast`` (the hash domain) constant for the life of an index.
+    delta partition, commit the rewritten survivors atomically.
 
     ``compact_every``: cadence policy for a long-running stream — fold
     the per-batch index partitions back to one whenever the live
@@ -110,13 +107,11 @@ def run_span_dedup_stream(
     fold runs after the batch's manifest commit, so it never races a
     replay, and an interrupted fold is healed on the next load.
 
-    ``use_bloom`` (requires ``fast``): probe through the compact Bloom
+    ``use_bloom``: probe through the compact Bloom
     presence tier (``build_gram_bloom``) so the O(distinct grams) index
     is scanned once per batch but never shuffled — output provably
     identical (the exact verify tier re-checks every candidate;
     test_span_bloom), the right trade once the index dwarfs the drops."""
-    if use_bloom and not fast:
-        raise ValueError("use_bloom requires fast=True (int64 hash domain)")
     from pyspark.sql import types as T
 
     schema = schema or T.StructType(
@@ -134,7 +129,7 @@ def run_span_dedup_stream(
         index = load_span_index(sp, index_dir, before_seq=batch_id)
         bloom = None
         if index is None:
-            index = _empty_index(sp, fast)
+            index = _empty_index(sp)
         elif use_bloom:
             from ..operators.span_dedup import build_gram_bloom
 
@@ -148,7 +143,7 @@ def run_span_dedup_stream(
         # (BENCH/span_stream_sf1_r5.json) — the curate stream's caching
         # win comes from its DOC-ROW frontiers, not token-level frames.
         out, delta = remove_duplicate_spans_incremental(
-            batch_df, index, text_col, id_col, l, min_count, fast, bloom=bloom
+            batch_df, index, text_col, id_col, l, min_count, bloom=bloom
         )
         # Delta partition FIRST (see module docstring): deterministic
         # content keyed by batch id, so a replay overwrites itself.

@@ -213,8 +213,8 @@ def main(argv=None):
 
     from invoice_extraction_spark.functions.text_metrics import (
         quality_score,
-        repetition_keep_fast,
-        repetition_stats_fast,
+        repetition_keep,
+        repetition_stats,
         token_count,
     )
     from invoice_extraction_spark.plans.observed_counts import ObservedCounts
@@ -406,7 +406,7 @@ def main(argv=None):
     if args.repetition_gate:
         df = record(
             "repetition_gate",
-            df.filter(repetition_keep_fast(repetition_stats_fast(F.col(text_col)))),
+            df.filter(repetition_keep(repetition_stats(F.col(text_col)))),
         )
     if args.nb_train or args.nb_weights:
         from invoice_extraction_spark.operators.doc_quality import (

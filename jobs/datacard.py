@@ -66,8 +66,8 @@ def main(argv=None):
 
     from invoice_extraction_spark.functions.text_metrics import (
         quality_score,
-        repetition_keep_fast,
-        repetition_stats_fast,
+        repetition_keep,
+        repetition_stats,
         token_count,
     )
     from invoice_extraction_spark.session import get_spark
@@ -117,7 +117,7 @@ def main(argv=None):
     enriched = df.withColumn("_tok", _tok_expr).withColumn(
         "_q", quality_score(text)
     ).withColumn(
-        "_rep_ok", repetition_keep_fast(repetition_stats_fast(text)).cast("double")
+        "_rep_ok", repetition_keep(repetition_stats(text)).cast("double")
     )
 
     totals = enriched.agg(

@@ -1,4 +1,4 @@
-"""Dedup operator semantics: fast Arrow MinHash == reference Column MinHash;
+"""Dedup operator semantics: Arrow MinHash == reference Column MinHash;
 LSH finds planted near-duplicates; exact dedup keeps min id."""
 
 import pandas as pd
@@ -10,11 +10,10 @@ from invoice_extraction_spark.operators.dedup import (
     lsh_band_stats,
     lsh_candidate_pairs,
     minhash_signature,
-    minhash_signature_fast,
     ngram_jaccard_pairs,
-    simhash_bits,
-    simhash_fast,
+    simhash,
 )
+from tests import references as ref
 
 
 def _docs(spark):
@@ -31,8 +30,8 @@ def _docs(spark):
 
 def test_fast_minhash_equals_column_minhash(spark):
     d = _docs(spark)
-    a = d.select("doc_id", minhash_signature(F.col("text"), 6).alias("sig")).collect()
-    b = d.select("doc_id", minhash_signature_fast(F.col("text"), 6).alias("sig")).collect()
+    a = d.select("doc_id", ref.minhash_signature(F.col("text"), 6).alias("sig")).collect()
+    b = d.select("doc_id", minhash_signature(F.col("text"), 6).alias("sig")).collect()
     assert {r["doc_id"]: r["sig"] for r in a} == {r["doc_id"]: r["sig"] for r in b}
 
 
@@ -110,8 +109,8 @@ def test_simhash_fast_equals_column(spark):
         (3, "x"),
     ]
     d = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    a = {r["doc_id"]: r["s"] for r in d.select("doc_id", simhash_bits(F.col("text")).alias("s")).collect()}
-    b = {r["doc_id"]: r["s"] for r in d.select("doc_id", simhash_fast(F.col("text")).alias("s")).collect()}
+    a = {r["doc_id"]: r["s"] for r in d.select("doc_id", ref.simhash_bits(F.col("text")).alias("s")).collect()}
+    b = {r["doc_id"]: r["s"] for r in d.select("doc_id", simhash(F.col("text")).alias("s")).collect()}
     assert a == b
     assert all(len(v) == 32 and set(v) <= {"0", "1"} for v in a.values())
 
@@ -290,13 +289,13 @@ def test_band_members_shared_pass_runs_kernel_once(spark, monkeypatch):
     import invoice_extraction_spark.operators.dedup as ddm
 
     calls = {"n": 0}
-    orig = ddm.minhash_signature_fast
+    orig = ddm.minhash_signature
 
     def counting(*a, **k):
         calls["n"] += 1
         return orig(*a, **k)
 
-    monkeypatch.setattr(ddm, "minhash_signature_fast", counting)
+    monkeypatch.setattr(ddm, "minhash_signature", counting)
     d = _docs(spark)
     m = ddm.band_members(d).persist()
     try:
@@ -429,15 +428,11 @@ def test_sigverify_hot_band_cap_bounds_fanout(spark):
             [(10, base.replace("today", "tonight"))], columns=["doc_id", "text"]
         )
     )
-    # plant the SAME band rows under 50 distinct history ids: a degenerate
-    # boilerplate band
-    hb = band_index(history)
-    planted = hb
-    for i in range(2, 51):
-        planted = planted.unionByName(hb.withColumn("id", F.lit(i)))
-    sigs = sig_index(history)
-    for i in range(2, 51):
-        sigs = sigs.unionByName(sig_index(history).withColumn("id", F.lit(i)))
+    # plant the SAME band rows under 50 distinct history ids (1..50, the
+    # history doc's own id among them): a degenerate boilerplate band
+    ids = spark.range(1, 51)
+    planted = band_index(history).drop("id").crossJoin(ids)
+    sigs = sig_index(history).drop("id").crossJoin(ids)
 
     # cap below the occupancy: every band is hot -> no candidates -> kept
     kept = dedup_incremental_sigverify(

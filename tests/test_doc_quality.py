@@ -1,8 +1,8 @@
 """Supervised doc-quality NB classifier (operators/doc_quality.py): the
 counting fit is deterministic and matches a DuckDB twin exactly, the
-Column scorer matches a DuckDB scoring twin under the driver comparator,
-the Arrow fast path equals the Column reference, and the gate separates
-labeled junk from keep-worthy text on held-out documents."""
+Arrow scorer matches a DuckDB scoring twin under the tests/parity.py comparator
+and equals the Column reference (tests/references.py), and the gate
+separates labeled junk from keep-worthy text on held-out documents."""
 
 import pandas as pd
 import pytest
@@ -11,9 +11,9 @@ from pyspark.sql import functions as F
 from invoice_extraction_spark.operators.doc_quality import (
     doc_nb_keep,
     doc_nb_score,
-    doc_nb_score_fast,
     fit_doc_nb,
 )
+from tests import references as ref
 from tests.parity import assert_parity, duck
 
 GOOD = [
@@ -100,7 +100,7 @@ def test_fit_matches_duckdb_twin(spark, fitted):
 
 
 def test_score_matches_duckdb_twin(spark, fitted):
-    """Column scorer vs a DuckDB twin joining the SAME frozen weights —
+    """Arrow scorer vs a DuckDB twin joining the SAME frozen weights —
     the driver-comparator contract (sorted columns, 4dp floats)."""
     df, (weights, prior) = fitted
     scored = df.select(
@@ -137,12 +137,12 @@ def test_fast_path_equals_column_reference(spark, fitted):
     )
     both = df.select("doc_id", "text").unionByName(extra).select(
         "doc_id",
-        doc_nb_score(F.col("text"), weights, prior).alias("ref"),
-        doc_nb_score_fast(F.col("text"), weights, prior).alias("fast"),
+        ref.doc_nb_score(F.col("text"), weights, prior).alias("ref"),
+        doc_nb_score(F.col("text"), weights, prior).alias("kernel"),
     )
     rows = both.collect()
     for r in rows:
-        assert r["ref"] == r["fast"], (r["doc_id"], r["ref"], r["fast"])
+        assert r["ref"] == r["kernel"], (r["doc_id"], r["ref"], r["kernel"])
 
 
 def test_classifier_separates_held_out(spark, fitted):
@@ -157,14 +157,14 @@ def test_classifier_separates_held_out(spark, fitted):
     scores = {
         r["doc_id"]: r["s"]
         for r in held.select(
-            "doc_id", doc_nb_score_fast(F.col("text"), weights, prior).alias("s")
+            "doc_id", doc_nb_score(F.col("text"), weights, prior).alias("s")
         ).collect()
     }
     assert scores[1] > 0 > scores[2]
     kept = doc_nb_keep(held, weights, prior)
     assert [r["doc_id"] for r in kept.collect()] == [1]
-    # Column-form gate agrees
-    kept_ref = doc_nb_keep(held, weights, prior, fast=False)
+    # the Column reference's gate agrees
+    kept_ref = held.filter(ref.doc_nb_score(F.col("text"), weights, prior) >= 0.0)
     assert [r["doc_id"] for r in kept_ref.collect()] == [1]
 
 

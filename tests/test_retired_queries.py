@@ -127,9 +127,7 @@ def test_repetition_filter_counts_parity(spark, con):
     got = (
         d.select(
             "lang",
-            tm.repetition_keep_fast(tm.repetition_stats_fast("text")).alias(
-                "keep"
-            ),
+            tm.repetition_keep(tm.repetition_stats("text")).alias("keep"),
         )
         .groupBy("lang", "keep")
         .agg(F.count("*").alias("n"))

@@ -103,10 +103,14 @@ def test_union_matches_single_build():
     assert (b1.union(b2).bits == whole.bits).all()
 
 
-def test_md5_domain_rejected(spark, frames):
-    hist, _ = frames
-    index = span_gram_index(hist, l=L, fast=False)
-    with pytest.raises(ValueError, match="int64 fast-path"):
+def test_md5_domain_rejected(spark):
+    """An index read from disk whose ``gh`` holds md5 hex strings, not the
+    kernel's int64 hashes, cannot feed the bitmap."""
+    index = spark.createDataFrame(
+        [("0cc175b9c0f1b6a831c399e269772661", 2, "000000000000001:000000000000001")],
+        "gh string, n_occ bigint, canon string",
+    )
+    with pytest.raises(ValueError, match="int64 gram hashes"):
         build_gram_bloom(index)
 
 

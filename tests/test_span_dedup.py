@@ -16,6 +16,7 @@ from invoice_extraction_spark.operators.span_dedup import (
     span_dedup_stats,
 )
 from tests.parity import assert_parity, duck
+from tests.references import md5_gram_occurrences
 
 L = 4  # small span threshold so the fixture exercises real overlaps
 
@@ -264,28 +265,37 @@ def _occ_classes(occ) -> set:
     return {frozenset(v) for v in by_gh.values()}
 
 
+def _md5_rewrite(docs, l):
+    """Intervals and rewritten corpus fed from the md5 reference
+    occurrences instead of the kernel's."""
+    iv = duplicate_span_intervals(docs, l=l, occ=md5_gram_occurrences(docs, l=l))
+    return iv, remove_duplicate_spans(docs, l=l, intervals=iv)
+
+
 def test_fast_path_matches_column_path(spark, docs):
     """VERDICT r4 #3: the Rabin-Karp Arrow kernel must be
-    equality-asserted against the md5 Column form — same (id, pos) rows,
-    same gram-equality classes, identical intervals and rewritten corpus."""
-    occ_f = gram_occurrences(docs, l=L, fast=True)
-    occ_s = gram_occurrences(docs, l=L, fast=False)
+    equality-asserted against the md5 Column reference — same (id, pos)
+    rows, same gram-equality classes, identical intervals and rewritten
+    corpus."""
+    occ_f = gram_occurrences(docs, l=L)
+    occ_s = md5_gram_occurrences(docs, l=L)
     pos_f = {(r["id"], r["pos"]) for r in occ_f.collect()}
     pos_s = {(r["id"], r["pos"]) for r in occ_s.collect()}
     assert pos_f == pos_s
     assert _occ_classes(occ_f) == _occ_classes(occ_s)
 
-    iv_f = {tuple(r) for r in duplicate_span_intervals(docs, l=L, fast=True).collect()}
-    iv_s = {tuple(r) for r in duplicate_span_intervals(docs, l=L, fast=False).collect()}
+    iv_md5, out_md5 = _md5_rewrite(docs, L)
+    iv_f = {tuple(r) for r in duplicate_span_intervals(docs, l=L).collect()}
+    iv_s = {tuple(r) for r in iv_md5.collect()}
     assert iv_f == iv_s
 
     out_f = {
         r["doc_id"]: (r["text"], r["n_tokens_removed"])
-        for r in remove_duplicate_spans(docs, l=L, fast=True).collect()
+        for r in remove_duplicate_spans(docs, l=L).collect()
     }
     out_s = {
         r["doc_id"]: (r["text"], r["n_tokens_removed"])
-        for r in remove_duplicate_spans(docs, l=L, fast=False).collect()
+        for r in out_md5.collect()
     }
     assert out_f == out_s
 
@@ -294,39 +304,13 @@ def test_fast_path_matches_column_path_real_corpus(spark):
     """Same assertion over the driver corpus at L=60 (the planted
     near-dup pairs make the cut set non-trivial)."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    iv_f = {tuple(r) for r in duplicate_span_intervals(docs, l=60, fast=True).collect()}
-    iv_s = {tuple(r) for r in duplicate_span_intervals(docs, l=60, fast=False).collect()}
+    iv_md5, out_md5 = _md5_rewrite(docs, 60)
+    iv_f = {tuple(r) for r in duplicate_span_intervals(docs, l=60).collect()}
+    iv_s = {tuple(r) for r in iv_md5.collect()}
     assert iv_f == iv_s and len(iv_f) > 0
-    f = {r["doc_id"]: r["text"] for r in remove_duplicate_spans(docs, l=60, fast=True).collect()}
-    s = {r["doc_id"]: r["text"] for r in remove_duplicate_spans(docs, l=60, fast=False).collect()}
+    f = {r["doc_id"]: r["text"] for r in remove_duplicate_spans(docs, l=60).collect()}
+    s = {r["doc_id"]: r["text"] for r in out_md5.collect()}
     assert f == s
-
-
-def test_incremental_fast_matches_column(spark):
-    """The incremental probe under each hash domain (index and probe
-    consistently fast or consistently md5) rewrites identically."""
-    from invoice_extraction_spark.operators.span_dedup import (
-        remove_duplicate_spans_incremental,
-        span_gram_index,
-    )
-
-    hist = spark.createDataFrame(
-        [(100, f"h1 h2 {SHARED} h3")], ["doc_id", "text"]
-    )
-    batch = spark.createDataFrame(
-        [(0, f"n1 {SHARED} n2"), (11, "w x y z q a"), (12, "b w x y z q")],
-        ["doc_id", "text"],
-    )
-    outs = {}
-    for fast in (True, False):
-        index = span_gram_index(hist, l=L, fast=fast)
-        out, delta = remove_duplicate_spans_incremental(
-            batch, index, l=L, fast=fast
-        )
-        outs[fast] = {
-            r["doc_id"]: (r["text"], r["n_tokens_removed"]) for r in out.collect()
-        }
-    assert outs[True] == outs[False]
 
 
 def test_hot_grams_is_persistable_index(spark, docs):
