@@ -7,8 +7,8 @@ reviews) assert the plan properties that matter at 100 TB:
 - filters/column pruning reach the parquet scan (PushedFilters / ReadSchema)
 - small dims broadcast (BroadcastHashJoin, not SortMergeJoin)
 - a pipeline has exactly the shuffles it should (count Exchange nodes)
-- per-document work stays in ONE Arrow stage (count ArrowEvalPython /
-  MapInPandas nodes)
+- per-document work stays in ONE Arrow stage (count the plan's
+  Python-worker nodes)
 """
 
 from __future__ import annotations
@@ -34,15 +34,67 @@ def count_exchanges(df: DataFrame) -> int:
     return len(re.findall(r"\bExchange hashpartitioning|\bExchange rangepartitioning|\bExchange RoundRobinPartitioning", plan))
 
 
-def count_python_stages(df: DataFrame) -> int:
-    plan = physical_plan(df)
-    return len(re.findall(r"MapInPandas|ArrowEvalPython|BatchEvalPython", plan))
+# Physical operators that run Python workers (Spark 4.1 class names).
+PYTHON_EXECS = frozenset(
+    {
+        "ArrowAggregatePythonExec",
+        "ArrowEvalPythonExec",
+        "ArrowEvalPythonUDTFExec",
+        "ArrowWindowPythonExec",
+        "BatchEvalPythonExec",
+        "BatchEvalPythonUDTFExec",
+        "FlatMapCoGroupsInArrowExec",
+        "FlatMapCoGroupsInPandasExec",
+        "FlatMapGroupsInArrowExec",
+        "FlatMapGroupsInPandasExec",
+        "FlatMapGroupsInPandasWithStateExec",
+        "MapInArrowExec",
+        "MapInPandasExec",
+        "TransformWithStateInPySparkExec",
+    }
+)
+
+
+def plan_node_names(plan) -> list[str]:
+    """Class names of every node of a JVM physical plan, walking into
+    adaptive plans (their current plan) and query stages (the plan each
+    stage ran); a reused exchange is not walked twice."""
+    out: list[str] = []
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        kind = node.getClass().getSimpleName()
+        out.append(kind)
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        elif kind != "ReusedExchangeExec":
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def python_nodes(df_or_plan) -> list[str]:
+    """The Python-worker operators (``PYTHON_EXECS``) of a DataFrame's
+    executed plan, or of a JVM physical plan (e.g. one a
+    QueryExecutionListener was handed)."""
+    plan = (
+        df_or_plan._jdf.queryExecution().executedPlan()
+        if isinstance(df_or_plan, DataFrame)
+        else df_or_plan
+    )
+    return [n for n in plan_node_names(plan) if n in PYTHON_EXECS]
+
+
+def count_python_stages(df_or_plan) -> int:
+    return len(python_nodes(df_or_plan))
 
 
 def has_row_python_udf(df: DataFrame) -> bool:
     """True if any slow-path row-at-a-time Python UDF is in the plan
     (BatchEvalPython = pickled row UDF, the thing the north rule bans)."""
-    return "BatchEvalPython" in physical_plan(df)
+    return "BatchEvalPythonExec" in python_nodes(df)
 
 
 def has_broadcast_join(df: DataFrame) -> bool:

@@ -37,13 +37,20 @@ def package_zip() -> str:
     return out
 
 
+def default_driver_memory() -> str:
+    """Half of the host's ``MemTotal``, capped at 32g (e.g. "7928m")."""
+    with open("/proc/meminfo") as fh:
+        kib = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return f"{min(kib // 2048, 32 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "spark-webtext-extract",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     m = re.fullmatch(r"local\[(\d+)\]", master)
     if m:  # keep the scan floor consistent with the session's real width
@@ -63,10 +70,11 @@ def get_spark(
         # concurrent tasks was ~150 MB of execution memory per task, and a
         # query sequence accumulates broadcasts until GC pressure inflated
         # later queries 2-4x (measured: span_dedup_stats 1.8 s alone but
-        # 7 s after five revenue reps' orders broadcasts). 32g is sized to
-        # this 128 GiB box and stays an env-tunable (-Xmx cap, not a
-        # reservation); clusters size executor memory explicitly anyway.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        # 7 s after five revenue reps' orders broadcasts). The -Xmx cap is
+        # half the host's memory, at most 32g, so a second JVM or the Python
+        # workers beside it still fit; clusters size executor memory
+        # explicitly anyway.
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # Scan-parallelism floor (guide §6 input split size): without it a

@@ -295,6 +295,9 @@ def test_gate_dropping_every_doc_recounts(spark, corpus_dir, tmp_path, capsys):
     }
     assert "stage exact_dedup: not read in full by the commit; recounting" in out.err
     assert out.out.rstrip().endswith("rows=0")
+    # the zero-row commit is a snapshot: it reads back empty, with the schema
+    back = read_table(spark, tbl)
+    assert back.count() == 0 and "text" in back.columns
 
 
 def test_curate_run_job_count(spark, corpus_dir, tmp_path, capsys):

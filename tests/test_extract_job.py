@@ -65,3 +65,24 @@ def test_extract_job_domain_quota_tier(spark, tmp_path):
     )
     assert all(r["count"] <= 2 for r in got)
     assert sum(r["count"] for r in got) == sum(min(r["count"], 2) for r in dom_counts)
+
+
+def test_extract_run_job_count(spark, tmp_path, capsys):
+    """The commit's lineage costs no Spark job: one jobs/extract.py run is
+    the extraction's shuffle and the write (2 jobs here, as many as when a
+    Python pass inside the write counted the rows)."""
+    from jobs.extract import main
+
+    src_dir = str(tmp_path / "src.parquet")
+    spark.createDataFrame(pages_pdf(40)).write.parquet(src_dir)
+    sc = spark.sparkContext
+    group = f"extract-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "job count of one extraction run")
+    try:
+        main(["--source", src_dir, "--table", str(tmp_path / "t"), "--partitions", "4"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "rows=40 ok=40" in capsys.readouterr().out
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 2, n_jobs
