@@ -23,8 +23,8 @@ Per micro-batch of new documents:
    ``near_verify=False`` for the cheaper candidate-level contract;
 3b. embedding dedup (optional, when the stream's rows carry an
    embedding column) — within-batch cluster collapse + history-wins
-   cosine drop against the persisted bucket-membership index (the
-   ``embedding_dedup_stream`` micro-batch kernel, applied to doc rows);
+   cosine drop against the persisted bucket-membership index
+   (``embedding_dedup_stream.dedup_batch_memberships``, on doc rows);
 3c. per-domain quota (optional, when ids are urls) — committed history
    counts against the quota first, then the batch competes for the
    remaining slots under the batch operator's deterministic md5(url)
@@ -99,6 +99,13 @@ from .span_dedup_stream import (
     load_span_index,
 )
 
+# Index layout, fixed for the life of an index root: every batch must
+# band, count and bucket exactly as the deltas it probes were written.
+NUM_BANDS = 4
+ROWS_PER_BAND = 2
+SPAN_MIN_COUNT = 2
+EMBEDDING_N_PLANES = 4
+
 
 def index_dirs(index_root: str) -> dict[str, str]:
     """The per-family index directories under one root (each its own
@@ -131,16 +138,12 @@ def run_curate_stream(
     near: bool = False,
     near_verify: bool = True,
     jaccard: float = 0.7,
-    num_bands: int = 4,
-    rows_per_band: int = 2,
     embedding_col: str | None = None,
     embedding_min_cos: float = 0.99,
-    embedding_n_planes: int = 4,
     embedding_dim: int = 64,
     embedding_n_probe: int = 1,
     max_per_domain: int | None = None,
     span_l: int | None = None,
-    span_min_count: int = 2,
     span_bloom: bool = False,
     max_files_per_trigger: int | None = None,
     compact_every: int | None = None,
@@ -148,8 +151,9 @@ def run_curate_stream(
 ) -> None:
     """Drain all unseen source parquet files (Trigger.AvailableNow) through
     the incremental curation chain (module docstring). Keep the tier
-    config (``num_bands``/``rows_per_band``/``span_l``) constant for the
-    life of an index root.
+    config (``span_l``, ``embedding_dim``, ``embedding_n_probe``) constant
+    for the life of an index root; the band layout, span count floor and
+    embedding planes are module constants for the same reason.
 
     ``nb_weights_path``: a frozen supervised doc-quality model
     (``operators/doc_quality.save_doc_nb``) — joins the stateless gates
@@ -276,8 +280,8 @@ def run_curate_stream(
                 text_col=text_col,
                 id_col=id_col,
                 threshold=jaccard,
-                num_bands=num_bands,
-                rows_per_band=rows_per_band,
+                num_bands=NUM_BANDS,
+                rows_per_band=ROWS_PER_BAND,
             )
             # the frame new_sigs AND the cross-batch probe both read —
             # caching it stops the bands/sigs delta writes from re-running
@@ -286,7 +290,7 @@ def run_curate_stream(
             band_idx = load_rows(sp, dirs["bands"], before_seq=batch_id)
             if near_verify:
                 new_sigs = sig_index(
-                    batch, text_col, id_col, num_bands * rows_per_band
+                    batch, text_col, id_col, NUM_BANDS * ROWS_PER_BAND
                 )
                 sig_idx = load_rows(sp, dirs["sigs"], before_seq=batch_id)
                 if band_idx is not None and sig_idx is None:
@@ -309,20 +313,19 @@ def run_curate_stream(
                         sig_idx,
                         text_col,
                         id_col,
-                        num_bands,
-                        rows_per_band,
+                        NUM_BANDS,
+                        ROWS_PER_BAND,
                         threshold=jaccard,
                         new_sigs=new_sigs,
                     )
             elif band_idx is not None:
                 batch = dedup_incremental(
-                    batch, band_idx, text_col, id_col, num_bands, rows_per_band
+                    batch, band_idx, text_col, id_col, NUM_BANDS, ROWS_PER_BAND
                 )
             batch = record("near", batch)
         # 3b) embedding tier (when the source carries a vector column):
         # within-batch cluster collapse + history-wins cosine drop against
-        # the persisted membership index — the same micro-batch kernel as
-        # run_embedding_dedup_stream, here gated on the doc rows
+        # the persisted membership index, gated on the doc rows
         emb_kept = None
         if embedding_col is not None:
             emb_hist = load_membership_index(
@@ -336,7 +339,7 @@ def run_curate_stream(
                     vec_col=embedding_col,
                     id_col=id_col,
                     min_cos=embedding_min_cos,
-                    n_planes=embedding_n_planes,
+                    n_planes=EMBEDDING_N_PLANES,
                     dim=embedding_dim,
                     n_probe=embedding_n_probe,
                 )
@@ -381,15 +384,16 @@ def run_curate_stream(
                 bloom = build_gram_bloom(gram_idx)
             # (the rolling-hash occurrences are deliberately NOT cached:
             # measured at sf1 the O(tokens) cache write costs more than
-            # recomputing the kernel over the cached doc rows — see
-            # span_dedup_stream.py's sink note)
+            # recomputing the kernel over the cached doc rows — it breaks
+            # the kernel -> partial-agg pipelining; 16-18 s/drop cached vs
+            # 6.4-7.1 s uncached, BENCH/span_stream_sf1_r5.json)
             out, gram_delta = remove_duplicate_spans_incremental(
                 batch,
                 gram_idx,
                 text_col,
                 id_col,
                 span_l,
-                span_min_count,
+                SPAN_MIN_COUNT,
                 bloom=bloom,
             )
             # the rewritten frame feeds the exact delta AND the commit
@@ -420,7 +424,7 @@ def run_curate_stream(
                     "id",
                     F.explode(
                         band_keys_from_sig(
-                            F.col("sig"), num_bands, rows_per_band
+                            F.col("sig"), NUM_BANDS, ROWS_PER_BAND
                         )
                     ).alias("band"),
                 ).write.mode("overwrite").parquet(
@@ -431,7 +435,7 @@ def run_curate_stream(
                 )
             else:
                 band_index(
-                    batch, text_col, id_col, num_bands, rows_per_band
+                    batch, text_col, id_col, NUM_BANDS, ROWS_PER_BAND
                 ).write.mode("overwrite").parquet(
                     f"{dirs['bands']}/seq={batch_id}"
                 )

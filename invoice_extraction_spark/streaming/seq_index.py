@@ -1,22 +1,32 @@
-"""Shared protocol for seq-partitioned streaming indexes.
+"""Shared protocol for the curation stream's seq-partitioned indexes.
 
-Every incremental-dedup stream persists its cross-batch state as an
-append-only directory of per-batch parquet partitions ``seq=<batch_id>/``:
-the sink writes the batch's delta partition FIRST (an idempotent overwrite
-keyed by batch id — a replayed batch regenerates byte-equal content into
-its own directory), then commits survivors through the atomic manifest.
+Every cross-batch index of ``curate_stream.py`` (exact fingerprints, LSH
+bands, MinHash signatures, embedding memberships, span grams, domain
+quotas) is an append-only directory of per-batch parquet partitions
+``seq=<batch_id>/``.
+
+Exactly-once WITHOUT a commit->index crash window: the sink writes each
+index delta FIRST, as an idempotent overwrite keyed by batch id (a
+replayed batch regenerates byte-equal content into its own directory),
+then commits survivors through the atomic manifest keyed by batch id.
 Probes fold only ``seq < batch_id`` partitions, so a replayed batch can
-never observe its own delta. That protocol ELIMINATES the commit->index
-crash window instead of healing it (`span_dedup_stream.py` module
-docstring has the full argument); this module holds the pieces every such
-index shares:
+never see its own delta — which would anti-join its own fingerprints
+away, make its vectors collide with themselves at cosine 1.0, or cut the
+canonical occurrences of its own spans (span_dedup.py's documented replay
+hazard). Die between a delta write and the commit: the checkpoint replays
+the batch, the manifest guard finds nothing, the delta overwrite is a
+no-op, the commit lands. Die after the commit: the replay is skipped
+wholesale and the deltas are already on disk. No heal pass exists because
+no state can be lost between the two writes.
+
+This module holds the pieces every such index shares:
 
 - ``recover_compaction`` / ``index_files`` / ``n_seq_partitions``:
   directory state, including healing an interrupted compaction swap.
-- ``load_rows``: the UNION-semantics logical view (fingerprints, band
-  rows, bucket memberships — facts that accumulate). Fold-semantics
-  indexes (the span-gram counts) keep their own load on top of the same
-  directory helpers.
+- ``load_rows``: the logical view over the partitions. The default fold
+  is a UNION (fingerprints, band rows, bucket memberships — facts that
+  accumulate); the span-gram index passes its own fold (counts sum, the
+  earliest canonical wins).
 - ``compact_rows``: fold the per-batch partitions back to a single one
   tagged with the max seq, via the marker-protected directory swap:
 
@@ -35,9 +45,14 @@ from __future__ import annotations
 
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def _union(df: DataFrame) -> DataFrame:
+    return df.drop("seq")
 
 
 def n_seq_partitions(index_dir: str) -> int:
@@ -64,38 +79,50 @@ def recover_compaction(index_dir: str) -> None:
         shutil.rmtree(old)
 
 
-def load_rows(
-    spark: SparkSession, index_dir: str, before_seq: int | None = None
-) -> DataFrame | None:
-    """The union-semantics logical index: every per-batch partition's rows,
-    ``seq`` dropped. ``before_seq`` excludes this batch's own partition
-    during a replay (partition-pruned). None when no index exists yet."""
+def _read(spark: SparkSession, index_dir: str) -> DataFrame | None:
     recover_compaction(index_dir)
     if not index_files(index_dir):
         return None
-    df = spark.read.option("basePath", index_dir).parquet(index_dir)
+    return spark.read.option("basePath", index_dir).parquet(index_dir)
+
+
+def load_rows(
+    spark: SparkSession,
+    index_dir: str,
+    before_seq: int | None = None,
+    fold: Callable[[DataFrame], DataFrame] = _union,
+) -> DataFrame | None:
+    """The logical index: ``fold`` over every per-batch partition's rows
+    (``seq`` still on them; the default union drops it). ``before_seq``
+    excludes this batch's own partition during a replay
+    (partition-pruned). None when no index exists yet."""
+    df = _read(spark, index_dir)
+    if df is None:
+        return None
     if before_seq is not None:
         df = df.filter(F.col("seq") < before_seq)  # partition-pruned
-    return df.drop("seq")
+    return fold(df)
 
 
-def compact_rows(spark: SparkSession, index_dir: str) -> int:
-    """Consolidate every per-batch partition of a union-semantics index
-    into a single one tagged with the max seq (rows unchanged). Returns
-    the number of partitions consolidated."""
-    recover_compaction(index_dir)
-    if not index_files(index_dir):
+def compact_rows(
+    spark: SparkSession,
+    index_dir: str,
+    fold: Callable[[DataFrame], DataFrame] = _union,
+) -> int:
+    """Consolidate every per-batch partition into a single one holding
+    ``fold`` of them, tagged with the max seq. Returns the number of
+    partitions consolidated."""
+    df = _read(spark, index_dir)
+    if df is None:
         return 0
-    df = spark.read.option("basePath", index_dir).parquet(index_dir)
     seqs = [r["seq"] for r in df.select("seq").distinct().collect()]
     if len(seqs) <= 1:
         return len(seqs)
-    rows = df.drop("seq")
     tmp = index_dir + ".compact.tmp"
     old = index_dir + ".compact.old"
     if os.path.isdir(tmp):
         shutil.rmtree(tmp)
-    rows.write.mode("overwrite").parquet(f"{tmp}/seq={max(seqs)}")
+    fold(df).write.mode("overwrite").parquet(f"{tmp}/seq={max(seqs)}")
     os.rename(index_dir, old)
     os.rename(tmp, index_dir)
     shutil.rmtree(old)

@@ -85,14 +85,16 @@ def test_gates_and_exact_cross_batch(spark, tmp_path):
     assert set(t) == {"g1", "f1"}
 
 
-def test_near_cross_batch(spark, tmp_path):
+@pytest.mark.parametrize("near_verify", [True, False])
+def test_near_cross_batch(spark, tmp_path, near_verify):
     dirs = src, tbl, idx, ckpt = _dirs(tmp_path)
     _write_batch(spark, src, [("g1", GOOD)])
-    _run(spark, dirs, near=True)
+    _run(spark, dirs, near=True, near_verify=near_verify)
     _write_batch(spark, src, [("n1", NEAR), ("f1", FRESH)])
-    _run(spark, dirs, near=True)
+    _run(spark, dirs, near=True, near_verify=near_verify)
     t = _texts(spark, tbl)
-    # n1 is a one-word edit of committed g1: band collision -> dropped;
+    # n1 is a one-word edit of committed g1: band collision -> dropped
+    # (near_verify=False: on the collision alone, dedup_incremental);
     # FRESH shares no shingles -> survives
     assert set(t) == {"g1", "f1"}
     bands = load_rows(spark, index_dirs(idx)["bands"])

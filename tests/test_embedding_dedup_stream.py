@@ -1,4 +1,5 @@
-"""Streaming embedding-cosine near-dup dedup
+"""The curation stream's embedding tier alone (``run_curate_stream``
+with ``exact=False, embedding_col="embedding"``) and its kernel
 (streaming/embedding_dedup_stream.py): within-batch clusters collapse to
 the min-id canonical, cross-batch near-dups drop with history winning (and
 a re-ingested id is idempotent), checkpoint replay is a no-op, an orphan
@@ -9,18 +10,24 @@ index rows, and membership-index compaction preserves the union."""
 import os
 
 import numpy as np
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from invoice_extraction_spark.sources.atomic import read_table
+from invoice_extraction_spark.streaming.curate_stream import (
+    index_dirs,
+    run_curate_stream,
+)
 from invoice_extraction_spark.streaming.embedding_dedup_stream import (
-    compact_membership_index,
+    dedup_batch_memberships,
     load_membership_index,
-    run_embedding_dedup_stream,
+)
+from invoice_extraction_spark.streaming.seq_index import (
+    compact_rows,
+    n_seq_partitions,
 )
 
 DIM = 8
+SCHEMA = "url string, text string, embedding array<double>"
 
 
 def _unit(v):
@@ -79,7 +86,7 @@ def vecs():
 
 def _write_batch(spark, src, rows):
     spark.createDataFrame(
-        [(u, v) for u, v in rows], "url string, embedding array<double>"
+        [(u, f"text of {u}", v) for u, v in rows], SCHEMA
     ).coalesce(1).write.mode("append").parquet(src)
 
 
@@ -93,9 +100,12 @@ def _dirs(tmp_path):
 
 
 def _run(spark, dirs, **kw):
-    src, tbl, idx, ckpt = dirs
-    kw.setdefault("dim", DIM)
-    run_embedding_dedup_stream(spark, src, tbl, idx, ckpt, **kw)
+    src, tbl, root, ckpt = dirs
+    kw.setdefault("embedding_n_probe", 0)
+    run_curate_stream(
+        spark, src, tbl, root, ckpt, schema=SCHEMA, exact=False,
+        embedding_col="embedding", embedding_dim=DIM, **kw,
+    )
 
 
 def _ids(spark, tbl):
@@ -103,7 +113,8 @@ def _ids(spark, tbl):
 
 
 def test_within_cross_batch_and_replay_idempotent(spark, tmp_path, vecs):
-    dirs = src, tbl, idx, ckpt = _dirs(tmp_path)
+    dirs = src, tbl, root, _ = _dirs(tmp_path)
+    idx = index_dirs(root)["emb"]
     _write_batch(spark, src, [("a0", vecs["a0"]), ("a1", vecs["a1"]),
                               ("a2", vecs["a2"]), ("s0", vecs["s0"])])
     _run(spark, dirs)
@@ -132,7 +143,7 @@ def test_within_cross_batch_and_replay_idempotent(spark, tmp_path, vecs):
 
 
 def test_reingested_id_is_idempotent(spark, tmp_path, vecs):
-    dirs = src, tbl, idx, ckpt = _dirs(tmp_path)
+    dirs = src, tbl, _, _ = _dirs(tmp_path)
     _write_batch(spark, src, [("s0", vecs["s0"])])
     _run(spark, dirs)
     _write_batch(spark, src, [("s0", vecs["s0"])])  # duplicate feed
@@ -146,7 +157,7 @@ def test_history_wins_chain_asymmetry(spark, tmp_path, vecs):
     middle link is NOT in the index, so b2 survives — the documented
     incremental asymmetry (one-shot components over {b0,b1,b2} would keep
     only b0)."""
-    dirs = src, tbl, idx, ckpt = _dirs(tmp_path)
+    dirs = src, tbl, _, _ = _dirs(tmp_path)
     for rows in ([("b0", vecs["b0"])], [("b1", vecs["b1"])],
                  [("b2", vecs["b2"])]):
         _write_batch(spark, src, rows)
@@ -159,7 +170,8 @@ def test_orphan_delta_partition_does_not_poison_replay(spark, tmp_path, vecs):
     must NOT see its own orphan partition — a batch probing into its own
     membership rows collides with itself at cosine 1.0 and the whole
     batch drops."""
-    dirs = src, tbl, idx, ckpt = _dirs(tmp_path)
+    dirs = src, tbl, root, _ = _dirs(tmp_path)
+    idx = index_dirs(root)["emb"]
     _write_batch(spark, src, [("a0", vecs["a0"])])
     _run(spark, dirs)
 
@@ -184,21 +196,22 @@ def test_orphan_delta_partition_does_not_poison_replay(spark, tmp_path, vecs):
     assert _ids(spark, tbl) == {"a0", "s1"}
 
 
-def test_probe_time_cap_skips_but_index_stays_complete(spark, tmp_path, vecs):
+def test_probe_time_cap_skips_but_index_stays_complete(spark, vecs):
     """max_bucket_size=1: every >=2-member bucket is skipped for candidate
     generation, so the a-cluster near-dups are NOT dropped (the cap is
-    honest, not silent) — yet their membership rows still land in the
-    index in full."""
-    dirs = src, tbl, idx, ckpt = _dirs(tmp_path)
-    _write_batch(spark, src, [("a0", vecs["a0"]), ("a1", vecs["a1"])])
-    _run(spark, dirs, max_bucket_size=1)
-    assert _ids(spark, tbl) == {"a0", "a1"}
-    idx_ids = {r["id"] for r in load_membership_index(spark, idx).collect()}
-    assert idx_ids == {"a0", "a1"}
+    honest, not silent) — yet their membership rows, the batch's index
+    delta, are returned in full."""
+    batch = spark.createDataFrame(
+        [("a0", vecs["a0"]), ("a1", vecs["a1"])],
+        "url string, embedding array<double>",
+    )
+    kept = dedup_batch_memberships(batch, None, dim=DIM, max_bucket_size=1)
+    assert {r["id"] for r in kept.collect()} == {"a0", "a1"}
 
 
 def test_compaction_preserves_union_and_future_batches(spark, tmp_path, vecs):
-    dirs = src, tbl, idx, ckpt = _dirs(tmp_path)
+    dirs = src, tbl, root, _ = _dirs(tmp_path)
+    idx = index_dirs(root)["emb"]
     _write_batch(spark, src, [("a0", vecs["a0"]), ("s0", vecs["s0"])])
     _run(spark, dirs)
     _write_batch(spark, src, [("s1", vecs["s1"])])
@@ -208,14 +221,14 @@ def test_compaction_preserves_union_and_future_batches(spark, tmp_path, vecs):
         (r["id"], r["bucket"], r["is_primary"])
         for r in load_membership_index(spark, idx).collect()
     }
-    assert compact_membership_index(spark, idx) == 2
+    assert compact_rows(spark, idx) == 2
     after = {
         (r["id"], r["bucket"], r["is_primary"])
         for r in load_membership_index(spark, idx).collect()
     }
     assert after == before
     assert len(os.listdir(idx)) == 1
-    assert compact_membership_index(spark, idx) == 1  # already compact
+    assert compact_rows(spark, idx) == 1  # already compact
 
     # a post-compaction batch still dedups against the whole history
     _write_batch(spark, src, [("a9", vecs["a2"])])
@@ -227,7 +240,8 @@ def test_compaction_cadence_policy(spark, tmp_path, vecs):
     """compact_every=2 with one-file micro-batches: the index keeps folding
     back to one partition, and every batch still dedups against the full
     compacted history."""
-    dirs = src, tbl, idx, ckpt = _dirs(tmp_path)
+    dirs = src, tbl, root, _ = _dirs(tmp_path)
+    idx = index_dirs(root)["emb"]
     files = [
         [("a0", vecs["a0"])],
         [("s0", vecs["s0"])],
@@ -238,11 +252,7 @@ def test_compaction_cadence_policy(spark, tmp_path, vecs):
         _write_batch(spark, src, rows)
     _run(spark, dirs, max_files_per_trigger=1, compact_every=2)
 
-    from invoice_extraction_spark.streaming.span_dedup_stream import (
-        _n_seq_partitions,
-    )
-
-    assert _n_seq_partitions(idx) == 1
+    assert n_seq_partitions(idx) == 1
     assert _ids(spark, tbl) == {"a0", "s0", "s1"}
     idx_ids = {r["id"] for r in load_membership_index(spark, idx).collect()}
     assert idx_ids == {"a0", "s0", "s1"}
@@ -251,12 +261,13 @@ def test_compaction_cadence_policy(spark, tmp_path, vecs):
 def test_multiprobe_memberships_persist(spark, tmp_path, vecs):
     """n_probe=1: each survivor persists (1+1) membership rows (primary +
     one flipped-bit probe), and cross-batch near-dups still drop."""
-    dirs = src, tbl, idx, ckpt = _dirs(tmp_path)
+    dirs = src, tbl, root, _ = _dirs(tmp_path)
+    idx = index_dirs(root)["emb"]
     _write_batch(spark, src, [("a0", vecs["a0"])])
-    _run(spark, dirs, n_probe=1)
+    _run(spark, dirs, embedding_n_probe=1)
     rows = load_membership_index(spark, idx).collect()
     assert len(rows) == 2
     assert sum(1 for r in rows if r["is_primary"]) == 1
     _write_batch(spark, src, [("a9", vecs["a1"])])
-    _run(spark, dirs, n_probe=1)
+    _run(spark, dirs, embedding_n_probe=1)
     assert _ids(spark, tbl) == {"a0"}

@@ -1,23 +1,26 @@
-"""Streaming incremental span dedup (streaming/span_dedup_stream.py):
-cross-batch repeated spans are cut with history winning, within-batch
-repeats keep the batch-canonical, checkpoint replay is a no-op, an
-orphan delta partition from a crashed attempt never poisons its own
-batch's replay (the crash window the LSH stream heals is eliminated by
-construction here), and index compaction preserves the fold."""
+"""The curation stream's span tier alone (``run_curate_stream`` with
+``exact=False, span_l=L``) and its gram index
+(streaming/span_dedup_stream.py): cross-batch repeated spans are cut with
+history winning, within-batch repeats keep the batch-canonical,
+checkpoint replay is a no-op, an orphan delta partition from a crashed
+attempt never poisons its own batch's replay, and index compaction
+preserves the fold."""
 
 import os
-import shutil
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from invoice_extraction_spark.operators.span_dedup import span_gram_index
 from invoice_extraction_spark.sources.atomic import read_table
+from invoice_extraction_spark.streaming.curate_stream import (
+    index_dirs,
+    run_curate_stream,
+)
+from invoice_extraction_spark.streaming.seq_index import n_seq_partitions
 from invoice_extraction_spark.streaming.span_dedup_stream import (
     compact_span_index,
     load_span_index,
-    run_span_dedup_stream,
 )
 
 L = 4
@@ -49,9 +52,9 @@ def _dirs(tmp_path):
     )
 
 
-def _run(spark, dirs):
-    src, tbl, idx, ckpt = dirs
-    run_span_dedup_stream(spark, src, tbl, idx, ckpt, l=L)
+def _run(spark, dirs, **kw):
+    src, tbl, root, ckpt = dirs
+    run_curate_stream(spark, src, tbl, root, ckpt, exact=False, span_l=L, **kw)
 
 
 def _texts(spark, tbl):
@@ -59,7 +62,8 @@ def _texts(spark, tbl):
 
 
 def test_cross_batch_span_cut_and_replay_idempotent(spark, tmp_path):
-    dirs = src, tbl, idx, ckpt = _dirs(tmp_path)
+    dirs = src, tbl, root, _ = _dirs(tmp_path)
+    idx = index_dirs(root)["grams"]
     _write_batch(spark, src, B0)
     _run(spark, dirs)
     t = _texts(spark, tbl)
@@ -99,7 +103,8 @@ def test_orphan_delta_partition_does_not_poison_replay(spark, tmp_path):
     must NOT see its own orphan partition (span_dedup.py's documented
     hazard — an index already containing the batch's delta cuts its
     canonical occurrences too)."""
-    dirs = src, tbl, idx, ckpt = _dirs(tmp_path)
+    dirs = src, tbl, root, _ = _dirs(tmp_path)
+    idx = index_dirs(root)["grams"]
     _write_batch(spark, src, B0)
     _run(spark, dirs)
 
@@ -120,7 +125,8 @@ def test_orphan_delta_partition_does_not_poison_replay(spark, tmp_path):
 
 
 def test_compaction_preserves_fold_and_future_batches(spark, tmp_path):
-    dirs = src, tbl, idx, ckpt = _dirs(tmp_path)
+    dirs = src, tbl, root, _ = _dirs(tmp_path)
+    idx = index_dirs(root)["grams"]
     _write_batch(spark, src, B0)
     _run(spark, dirs)
     _write_batch(spark, src, B1)
@@ -150,20 +156,15 @@ def test_compaction_cadence_policy(spark, tmp_path):
     back to a single partition as the stream runs (never more than 2
     live), every batch still dedups against the FULL folded history, and
     the end-state index equals the one-shot fold over the whole corpus."""
-    dirs = src, tbl, idx, ckpt = _dirs(tmp_path)
+    dirs = src, tbl, root, _ = _dirs(tmp_path)
+    idx = index_dirs(root)["grams"]
     extra = ("u9", f"y1 {SHARED} y2")
     files = [[B0[0]], [B0[1]], [B1[0]], [B1[1], extra]]
     for rows in files:
         _write_batch(spark, src, rows)
-    run_span_dedup_stream(
-        spark, src, tbl, idx, ckpt, l=L, max_files_per_trigger=1, compact_every=2
-    )
+    _run(spark, dirs, max_files_per_trigger=1, compact_every=2)
 
-    from invoice_extraction_spark.streaming.span_dedup_stream import (
-        _n_seq_partitions,
-    )
-
-    assert _n_seq_partitions(idx) == 1  # cadence kept folding
+    assert n_seq_partitions(idx) == 1  # cadence kept folding
     t = _texts(spark, tbl)
     assert t["u0"] == f"one two {SHARED} seven eight"  # canonical verbatim
     assert t["u1"] == "nine ten eleven"  # cut vs batch-0 history
@@ -189,7 +190,8 @@ def test_interrupted_compaction_recovers(spark, tmp_path):
     """Die between the two directory renames: the live dir is gone and the
     complete consolidated tmp remains — the next load (or stream start)
     must promote it with nothing lost."""
-    dirs = src, tbl, idx, ckpt = _dirs(tmp_path)
+    dirs = src, tbl, root, _ = _dirs(tmp_path)
+    idx = index_dirs(root)["grams"]
     _write_batch(spark, src, B0)
     _run(spark, dirs)
     _write_batch(spark, src, B1)
@@ -236,16 +238,3 @@ def test_string_id_one_shot_semantics(spark):
     assert out["u1"] == ("nine ten eleven", 6)
     assert out["u2"][1] == 0
 
-
-def test_use_bloom_identical_output(spark, tmp_path):
-    """use_bloom probes through the Bloom presence tier; the exact verify
-    tier keeps the streamed corpus byte-identical to the plain probe."""
-    plain = _dirs(tmp_path / "plain")
-    bloomed = _dirs(tmp_path / "bloomed")
-    for dirs, kw in ((plain, {}), (bloomed, {"use_bloom": True})):
-        src, tbl, idx, ckpt = dirs
-        _write_batch(spark, src, B0)
-        run_span_dedup_stream(spark, src, tbl, idx, ckpt, l=L, **kw)
-        _write_batch(spark, src, B1)
-        run_span_dedup_stream(spark, src, tbl, idx, ckpt, l=L, **kw)
-    assert _texts(spark, bloomed[1]) == _texts(spark, plain[1])
